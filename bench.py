@@ -504,7 +504,7 @@ def _write_baseline_md(scale: str, per_query: dict, result: dict) -> None:
             "in the executed plan).  The multi-consumer subtrees those "
             "persists were meant to share — 0050's candidate set was "
             "re-derived ~4x — silently recomputed since round 1.  "
-            "Fixed with stable_checkpoint; 0050 24.4-26.3 → "
+            "Fixed with an eager checkpoint (lib.materialize); 0050 24.4-26.3 → "
             "20.3-21.0 s solo.\n"
             "2. **Self-join doubling chains** (0400, 0290, 0190): a "
             "stage that derives keys from its input and joins them "

@@ -4,7 +4,9 @@ Each check module exposes ``run(v: OsmViews) -> DataFrame`` taking the
 *tiled* relational views and returning _tmp_errors-shaped rows
 (errors.ERROR_COLS).  Error numbering follows the reference
 (config/error_types.php): check N owns the decade N..N+9, subtypes are
-N + additivum.
+N + additivum.  A module whose types leave its decade declares the
+inclusive range it owns as ``OWNS`` (0190: crossings 191-198, overlaps
+201-208).
 """
 
 from __future__ import annotations
@@ -81,6 +83,14 @@ def check_emits(check_ids=None) -> set[str]:
             continue
         types |= set(getattr(mod, "EMITS", ("node", "way", "relation")))
     return types
+
+
+def owned_types(cid: int) -> tuple[int, int]:
+    """Inclusive error_type range check ``cid`` owns: the span a
+    partial run clears when the check's errors vanish."""
+    mod_name = _CHECK_MODULES.get(cid)
+    mod = import_module(f".{mod_name}", __package__) if mod_name else None
+    return getattr(mod, "OWNS", (cid, cid + 9))
 
 
 def get_check(cid: int) -> Callable[[OsmViews], DataFrame]:

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..codec import OsmViews
 from ..data_tables import AREA_RULES
 from ..errors import finish_errors
-from ..lib import stable_checkpoint
+from ..lib import materialize
 
 MSGID = "This way is tagged with '$1=$2' and should be closed-loop"
 
@@ -251,10 +251,8 @@ def run(v: OsmViews) -> DataFrame:
         .filter(F.col("nw") > 1)
         .select("tile", "rule_id", "node_id")
     )
-    # materialized (multi-consumer reuse): run() only builds the plan,
-    # so a .persist() paired with a build-time .unpersist() never
-    # survives to the write action (probed r5) — checkpoint instead
-    cwn_j = stable_checkpoint(
+    # materialized: several consumers below
+    cwn_j = materialize(
         cwn.join(jn, ["tile", "rule_id", "node_id"], "left_semi")
     )
 
@@ -273,7 +271,7 @@ def run(v: OsmViews) -> DataFrame:
             "first_node_id", "last_node_id", "cls_k", "cls_v",
         )
     )
-    subjects = stable_checkpoint(subjects)
+    subjects = materialize(subjects)
 
     # per-(tile, rule) reachability inside a vectorized applyInPandas
     # operator: the rule-class junction graphs are tile-local and

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..codec import OsmViews
 from ..errors import finish_errors
-from ..lib import stable_checkpoint, way_layers
+from ..lib import materialize, way_layers
 from ..spatial import (
     bbox_cells,
     point_cells,
@@ -109,12 +109,8 @@ def run(v: OsmViews) -> DataFrame:
         .fillna({"layer": "0"})
     )
     # materialize: the ends subtree (a full way_nodes usage count)
-    # appears 4+ times in the final plan (subjects → cand1/p2, e2).
-    # NOT .persist()+.unpersist(): run() only BUILDS the plan — an
-    # unpersist before the write action drops the cache entry before
-    # any job can use it (probed: no InMemoryRelation in the executed
-    # plan), which silently recomputed ends per appearance until r5.
-    ends = stable_checkpoint(_end_nodes(v, hw))
+    # appears 4+ times in the final plan (subjects → cand1/p2, e2)
+    ends = materialize(_end_nodes(v, hw))
 
     # en-nodes that may not be the *subject* of a candidate
     subject_excluded = (
@@ -215,7 +211,7 @@ def run(v: OsmViews) -> DataFrame:
     # veto scan, the veto anti-join, the shared-node exclusion, the
     # winner window) re-derives cands — without a cut the expensive
     # cell joins above appear ~4x in the final plan
-    cands = stable_checkpoint(cand1.unionByName(cand2))
+    cands = materialize(cand1.unionByName(cand2))
 
     # ---- barrier veto ----------------------------------------------
     barrier_ways = (

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..codec import OsmViews
 from ..errors import finish_errors
-from ..lib import stable_checkpoint
+from ..lib import materialize
 
 MSGID = "This way is not connected to the rest of the map"
 HW_EXCLUDED = [
@@ -93,9 +93,7 @@ def run(v: OsmViews) -> DataFrame:
         .select("tile", "node_id")
     )
     # member way_nodes restricted to junction nodes (_tmp_wn)
-    # materialized (multi-consumer reuse): a build-time unpersist made
-    # the old .persist() a no-op at write time (probed r5)
-    wnj = stable_checkpoint(wn.join(junctions, ["tile", "node_id"], "left_semi"))
+    wnj = materialize(wn.join(junctions, ["tile", "node_id"], "left_semi"))
     connector = _connector_only(v)
 
     # error A: member way with no junction at all

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from ..codec import OsmViews
 from ..errors import finish_errors
 from ..lib import way_layers
-from ..lib import stable_checkpoint
+from ..lib import materialize
 from ..mercator import R_MAJOR, _RAD2DEG, merc_lat_udf
 from ..spatial import bbox_cells, way_segments
 
@@ -144,7 +144,7 @@ def run(v: OsmViews) -> DataFrame:
     # plan carries ~380 parquet scans / 660 exchanges (probed r5,
     # scale s) and Catalyst re-optimizes every copy; with it the
     # returned plan is 2 scans / 7 exchanges
-    ways = stable_checkpoint(classify_ways(v))
+    ways = materialize(classify_ways(v))
     segs = way_segments(v, ways.select("tile", "way_id")).join(
         ways, ["tile", "way_id"]
     )
@@ -380,7 +380,7 @@ def run(v: OsmViews) -> DataFrame:
     # check's wall, measured r2).  Two consumers remain (cross / over)
     # and the frame is post-filter pair-level — the cheapest
     # materialization point in the dataflow.
-    pair_stats = stable_checkpoint(pair_stats)
+    pair_stats = materialize(pair_stats)
 
     subtype = _subtype_col(F.col("t1"), F.col("t2"))
 
@@ -460,3 +460,5 @@ def run(v: OsmViews) -> DataFrame:
 
 # object types this check can emit (error_view resolution pruning)
 EMITS = ('way',)
+# error types this check owns: crossings 190+, overlaps 200+subtype
+OWNS = (190, 209)

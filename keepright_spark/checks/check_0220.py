@@ -45,7 +45,7 @@ from ..data_tables import (
     OVERRULES_0220,
 )
 from ..errors import finish_errors
-from ..lib import html_escape, quoted_tag_list, tags_of
+from ..lib import html_escape, materialize, quoted_tag_list, tags_of
 
 K_NUM_RE = r"_*[0-9]+([ \.+/\(\)-]+[0-9]+)*"
 V_NUM_RE = r"[0-9]+([ \.+/\(\)-]+[0-9]+)*"
@@ -110,7 +110,7 @@ def _check_220_all(v: OsmViews) -> DataFrame:
         F.split(F.col("vn"), ":"),
         F.array(F.lit("")),
     )
-    tags = (
+    tags = materialize(
         tags0.select(
             "tile", "otype",
             F.col("k").alias("k_orig"), F.col("v").alias("v_orig"),
@@ -120,7 +120,6 @@ def _check_220_all(v: OsmViews) -> DataFrame:
         .withColumn("keylist", keylist)
         .groupBy("tile", "otype", "keylist", "k_orig", "v_orig")
         .agg(F.count(F.lit(1)).alias("tag_count"))
-        .persist()
     )
 
     fp_df = F.broadcast(
@@ -175,7 +174,7 @@ def _check_220_all(v: OsmViews) -> DataFrame:
         .drop("_div")
     )
     fkey = F.concat(F.col("prefix"), F.lit(":"), F.col("part"))
-    cand = (
+    cand = materialize(
         cand.join(force_irr.withColumnRenamed("fk", "_fi"), fkey == F.col("_fi"), "left")
         .join(force_reg.withColumnRenamed("fk", "_fr"), fkey == F.col("_fr"), "left")
         .withColumn(
@@ -184,7 +183,6 @@ def _check_220_all(v: OsmViews) -> DataFrame:
             .when(F.col("_fr").isNotNull(), F.lit(True))
             .otherwise(F.col("cnt") >= F.col("climit")),
         )
-        .persist()
     )
     irregular = cand.filter(~F.col("is_reg")).select(*gkey, "prefix", "part")
     regular = cand.filter(F.col("is_reg")).select(

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..codec import OsmViews
 from ..errors import finish_errors
-from ..lib import stable_checkpoint
+from ..lib import materialize
 from ..spatial import bbox_cells, point_seg_dist2, seg_cross, way_segments
 
 CELL_M = 256.0
@@ -131,7 +131,7 @@ def run(v: OsmViews) -> DataFrame:
     # scanned by svc_segs AND the veto pair join), junc_kept and the
     # final emit — without a cut the way_nodes groupBy + endpoint
     # anti-join re-derives per consumer
-    junc = stable_checkpoint(
+    junc = materialize(
         junc.join(endpoint_nodes, ["tile", "node_id"], "left_anti")
     )
 
@@ -162,7 +162,7 @@ def run(v: OsmViews) -> DataFrame:
     )
     # two consumers (svc_segs work-list, veto pair join) re-derive the
     # access-exception anti-join otherwise
-    service_pairs = stable_checkpoint(service_pairs)
+    service_pairs = materialize(service_pairs)
 
     # rest-area proximity veto (0270:88-113)
     svc_segs = way_segments(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..boundaries import stitched_border_ways
 from ..codec import OsmViews
 from ..errors import finish_errors
-from ..lib import html_escape
+from ..lib import html_escape, materialize
 
 MSG_281 = "This boundary has no name"
 MSG_282A = "The boundary of $1 has no admin_level"
@@ -58,7 +58,7 @@ def _obj(df: DataFrame) -> DataFrame:
 
 
 def run(v: OsmViews) -> DataFrame:
-    bw = stitched_border_ways(v).persist()
+    bw = materialize(stitched_border_ways(v))
 
     # 281: no name
     p281 = finish_errors(

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..codec import OsmViews
 from ..errors import finish_errors
-from ..lib import html_escape, stable_checkpoint
+from ..lib import html_escape, materialize
 
 RESTRICTION_TYPES = [
     "restriction", "restriction:hgv", "restriction:caravan",
@@ -192,7 +192,7 @@ def run(v: OsmViews) -> DataFrame:
     # 297/298 joins) re-derives rr, and rr embeds both the pinned-
     # member windows and the whole early-error union via bad_ids —
     # one tiny frame, ~6 consumers
-    rr = stable_checkpoint(
+    rr = materialize(
         r.filter(
             F.col("from_id").isNotNull()
             & F.col("to_id").isNotNull()

@@ -37,6 +37,7 @@ from ..boundaries import lht_country_edges
 from ..codec import OsmViews
 from ..data_tables import FIXUP_LHT_POLYGONS
 from ..errors import finish_errors
+from ..lib import materialize
 
 MSG_311 = (
     "This way is part of a roundabout but is not closed-loop. "
@@ -200,11 +201,10 @@ def run(v: OsmViews) -> DataFrame:
             ),
         )
     )
-    parts = (
+    parts = materialize(
         parts0.groupBy("tile")
         .applyInPandas(_stitch_tile, _PART_SCHEMA)
         .filter(F.col("sequence_id").isNotNull())
-        .persist()
     )
 
     # ---- 311: non-closed parts ----------------------------------

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..codec import OsmViews
 from ..errors import finish_errors
-from ..lib import find_oneways, stable_checkpoint
+from ..lib import find_oneways, materialize
 
 MSG_BOTH = (
     "ways $1 and $2 join in a very sharp angle here and there is no "
@@ -191,7 +191,7 @@ def _check_0401(v: OsmViews) -> DataFrame:
     # of the four clear() stages doubles whatever it is handed (hit
     # derives from df, then joins back onto df), a 2^4 blow-up by the
     # last stage without a cut here
-    sharp = stable_checkpoint(sharp)
+    sharp = materialize(sharp)
 
     # same name/ref exclusion (0400:227-243)
     nr = v.way_tags.filter(F.col("k").isin("name", "ref")).select(
@@ -238,12 +238,12 @@ def _check_0401(v: OsmViews) -> DataFrame:
     sharp = sharp.withColumn("err1", err_first).withColumn("err2", err_second)
     # second cut before the four doubling clear() stages (see above):
     # sharp is tiny here (post-exclusion candidate pairs with flags)
-    sharp = stable_checkpoint(sharp)
+    sharp = materialize(sharp)
 
     # turn-restriction rules (0400:396-453)
     # materialized: no_r / only_r each feed two clear() stages, so the
     # relation-member role joins would be re-embedded four times
-    r = stable_checkpoint(_restrictions(v))
+    r = materialize(_restrictions(v))
     no_r = r.filter(F.col("rtype") == "no").select("tile", "from_way", "to_way")
     only_r = r.filter(F.col("rtype") == "only").select("tile", "from_way", "to_way")
 

@@ -65,7 +65,7 @@ from ..data_tables import (
     WHITELIST_0410,
 )
 from ..export import split_tag
-from ..lib import stable_checkpoint, tags_of
+from ..lib import materialize, tags_of
 
 MSG_411 = (
     'The URL (<a target="_blank" href="$1">$1</a>) cannot be opened '
@@ -375,11 +375,10 @@ def run_cached(v: OsmViews, webcache: DataFrame) -> DataFrame:
     # Candidate selection scans every tag through the whitelist regex —
     # truncate lineage once so the hop loop (and the 411/412/413 branches
     # below, which all reuse `resolved`) never re-derives it.  Each hop
-    # is checkpointed too: the loop is data-dependent (early exit when no
+    # is materialized too: the loop is data-dependent (early exit when no
     # URL still redirects), so without truncation hop N's plan would
-    # embed N copies of the fetch join.  Cluster-safe via
-    # lib.stable_checkpoint (reliable dir when configured).
-    state = stable_checkpoint(fetch(candidates(v)))
+    # embed N copies of the fetch join.
+    state = materialize(fetch(candidates(v)))
     resolved_parts = [state.filter(F.col("hop_to").isNull())]
     pending = state.filter(F.col("hop_to").isNotNull())
     for _ in range(MAX_REDIRECTS):
@@ -389,7 +388,7 @@ def run_cached(v: OsmViews, webcache: DataFrame) -> DataFrame:
             "object_type", "id", "access_only", "needles",
             _queue_norm(_normalize_rel(F.col("hop_to"), F.col("url"))).alias("url"),
         )
-        hopped = stable_checkpoint(fetch(nxt))
+        hopped = materialize(fetch(nxt))
         resolved_parts.append(hopped.filter(F.col("hop_to").isNull()))
         pending = hopped.filter(F.col("hop_to").isNotNull())
     # still redirecting after the hop budget → give up silently

@@ -1192,10 +1192,10 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
     Scale shape: the vertex set is only pair-touched docs (the dup
     graph is sparse — ≪ corpus size); per round two hash shuffles
     keyed on doc_id, lineage truncated per round
-    (``stable_checkpoint``), convergence detected by a counted
+    (``materialize``), convergence detected by a counted
     aggregate, never a driver collect of the labels.
     """
-    from .lib import stable_checkpoint
+    from .lib import materialize
 
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -1205,7 +1205,7 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
         )
         .dropDuplicates(["src", "dst"])
     )
-    edges = stable_checkpoint(edges)
+    edges = materialize(edges)
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -1234,7 +1234,7 @@ def cc_labels(pairs: DataFrame) -> DataFrame:
                 F.least("lab1", F.coalesce("j_lab", "lab1")).alias("lab"),
             )
         )
-        new = stable_checkpoint(new)
+        new = materialize(new)
         changed = new.filter(F.col("lab") != F.col("old_lab")).count()
         labels = new.select("doc_id", "lab")
         if changed == 0:

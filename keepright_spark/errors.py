@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from .codec import OsmViews
 from .tiling import Tile, clip_errors
-from .lib import stable_checkpoint
+from .lib import materialize
 
 TXT_COLS = ["txt1", "txt2", "txt3", "txt4", "txt5"]
 ERROR_COLS = [
@@ -219,7 +219,7 @@ def resolve_locations(
         "tile", "relation_id", F.col("member_id").alias("child_id"), "sequence_id"
     )
     if rel_member_rel.limit(1).count() > 0:
-        rel_loc = stable_checkpoint(rel_loc)
+        rel_loc = materialize(rel_loc)
         for _ in range(100):
             nested = (
                 rel_member_rel.join(
@@ -239,12 +239,12 @@ def resolve_locations(
                 .filter(F.col("_rn") == 1)
                 .select("tile", F.col("relation_id").alias("object_id"), "lat", "lon")
             )
-            frontier = stable_checkpoint(
+            frontier = materialize(
                 nested.join(rel_loc, ["tile", "object_id"], "left_anti")
             )
             if frontier.count() == 0:
                 break
-            rel_loc = stable_checkpoint(rel_loc.unionByName(frontier))
+            rel_loc = materialize(rel_loc.unionByName(frontier))
     parts.append(
         no_ll.filter(F.col("object_type") == "relation").join(
             rel_loc, ["tile", "object_id"], "inner"
@@ -267,13 +267,11 @@ def build_error_view(
 
     Returns error_view-shaped rows with deterministic columns only
     (timestamps/state handled by the lifecycle module)."""
-    from pyspark.storagelevel import StorageLevel
-
-    # staging errors are tiny relative to the views; persisting them
+    # staging errors are tiny relative to the views; materializing them
     # keeps resolve_locations' four per-object-type branches from
     # recomputing every check, and lets AQE's empty-relation
     # propagation skip the branches a check doesn't use
-    out = dedupe_errors(errors).persist(StorageLevel.MEMORY_AND_DISK)
+    out = materialize(dedupe_errors(errors))
     out = resolve_locations(out, v, emit_types)
     out = clip_errors(out, tiles)
     return out.select(ERROR_COLS)

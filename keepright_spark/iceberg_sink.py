@@ -6,8 +6,8 @@ given the previous table and this run's fresh error_view rows,
 
 * rows present on both sides  → payload refresh + cleared→reopened
   (else →new), ``last_checked = run_seq``;
-* rows only in the old table, inside the run's scope (executed
-  checks' decades × executed tiles) and not already cleared
+* rows only in the old table, inside the run's scope (the types the
+  executed checks own × executed tiles) and not already cleared
   → ``state = 'cleared'``, ``last_checked = run_seq``;
 * rows only on the fresh side → insert as 'new' ('preliminary' for
   410-419) with a deterministic new ``error_id``.
@@ -24,7 +24,7 @@ pointer swap; Iceberg's own metadata keeps the version history that
 * ``WHEN NOT MATCHED [BY TARGET]`` ↔ the fresh-only branch
 * ``WHEN NOT MATCHED BY SOURCE``   ↔ the old-only branch (Spark ≥ 3.4
   MERGE syntax; the scope predicate guards it exactly like
-  ``_decade_scope`` + ``tile_scope``)
+  ``checks.owned_types`` + ``tile_scope``)
 
 Key equality uses ``<=>`` (null-safe), mirroring the reference's
 ``IS NOT DISTINCT FROM`` (run-checks.php:250) and sync_errors'
@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 import re
 
+from .checks import owned_types
 from .errors import TXT_COLS
 from .lifecycle import KEY
 
@@ -121,11 +122,11 @@ def merge_sql(
         if not _SQL_NAME.fullmatch(name):
             raise ValueError(f"unsafe SQL identifier: {name!r}")
     on = " AND ".join(f"t.{k} <=> s.{k}" for k in KEY)
-    decades = " OR ".join(
-        f"(t.error_type BETWEEN {cid} AND {cid + 9})"
-        for cid in executed_checks
+    owned = " OR ".join(
+        f"(t.error_type BETWEEN {lo} AND {hi})"
+        for lo, hi in map(owned_types, executed_checks)
     )
-    scope = f"({decades})"
+    scope = f"({owned})"
     if tile_scope is not None:
         # tile names are data, not identifiers: escape single quotes so
         # a hostile/odd tile name cannot break (or inject into) the MERGE
@@ -215,8 +216,6 @@ def merge_sync_errors(
             "lifecycle.sync_errors (parquet sink) or add "
             "iceberg-spark-runtime + a catalog to the session conf"
         )
-    from .lifecycle import _decade_scope
-
     target = spark.table(table)
     max_id = target.agg(F.coalesce(F.max("error_id"), F.lit(0))).first()[0]
     f = fresh.select(*KEY, "msgid", *TXT_COLS)
@@ -225,13 +224,11 @@ def merge_sync_errors(
     for k in KEY:
         c = f[k].eqNullSafe(tkeys[k])
         cond = c if cond is None else cond & c
-    # ids are assigned ONLY over to-be-inserted rows (after the decade
-    # filter), exactly like sync_errors' fresh_new branch — matched
-    # rows must not consume id space, or the two sinks diverge
+    # ids are assigned ONLY over to-be-inserted rows, exactly like
+    # sync_errors' fresh_new branch — matched rows must not consume id
+    # space, or the two sinks diverge
     fresh_only = f.join(tkeys, cond, "left_anti")
-    new_rows = assign_fresh_ids(
-        fresh_only.filter(_decade_scope(executed_checks)), int(max_id)
-    )
+    new_rows = assign_fresh_ids(fresh_only, int(max_id))
     fresh_match = f.join(tkeys, cond, "left_semi").withColumn(
         "error_id", F.lit(None).cast("long")
     )

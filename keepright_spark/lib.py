@@ -7,6 +7,9 @@ no Python UDFs anywhere in these paths.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -15,22 +18,50 @@ from .codec import OsmViews
 FALSY = ["no", "false", "0"]  # the reference's NOT IN ('no','false','0')
 
 
-def stable_checkpoint(df: DataFrame) -> DataFrame:
-    """Truncate lineage at an iteration/reuse point, cluster-safely.
+_open_scope: ContextVar[list[DataFrame] | None] = ContextVar(
+    "materialization_scope", default=None
+)
 
-    ``localCheckpoint`` stores blocks on the executors that computed
-    them: on a real cluster one executor loss makes the truncated
-    lineage unrecoverable and fails the job.  When a reliable
-    checkpoint dir is configured (``setCheckpointDir`` — HDFS/S3 in
-    production, any shared path; wired from ``KR_CHECKPOINT_DIR`` by
-    session.get_spark), use a reliable ``checkpoint`` instead; in
-    this sandbox's single-JVM local mode, executor loss == driver
-    loss, so localCheckpoint is equivalent and avoids the write.
+
+@contextmanager
+def materialization_scope():
+    """Own what ``materialize`` returns inside the block; on exit free
+    each frame's blocks through its checkpoint's backing ``LogicalRDD``
+    (``df.unpersist()`` does not free a localCheckpoint)."""
+    held: list[DataFrame] = []
+    token = _open_scope.set(held)
+    try:
+        yield
+    finally:
+        _open_scope.reset(token)
+        for df in held:
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and truncate its lineage — the one way an
+    intermediate is materialized: an eager ``localCheckpoint``, or a
+    reliable ``checkpoint`` when a checkpoint dir is set (on a cluster,
+    executor loss would orphan local blocks).
+
+    Owner and lifetime: the innermost open ``materialization_scope``
+    (a contextvar, so one per staged-runner thread) owns the result
+    and frees it on exit.  The owners are the staged runner (each
+    check's write), ``prepare`` (tile assignment and the view/helper
+    writes) and ``run_persistent`` (each group's write, then
+    sync/commit).  Reliable-checkpoint files are left to
+    ``cleanCheckpoints`` (session.get_spark).  With no scope open the
+    result is not tracked and lives until the JVM garbage-collects it.
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+        out = df.checkpoint(eager=True)
+    else:
+        out = df.localCheckpoint(eager=True)
+    held = _open_scope.get()
+    if held is not None:
+        held.append(out)
+    return out
 
 
 def html_escape(col: Column) -> Column:

@@ -5,8 +5,8 @@ Re-expression of run-checks.php's state machinery over a parquet
 
 * ``sync_errors``  — the _tmp_errors ⇄ public.errors state sync
   (run-checks.php:221-277): still-present errors update payload and
-  flip cleared→reopened (else →new); vanished errors owned by the
-  executed checks' decades are cleared; fresh errors insert as 'new'
+  flip cleared→reopened (else →new); vanished errors of the types the
+  executed checks own are cleared; fresh errors insert as 'new'
   ('preliminary' for 410-419).  The NULL-safe join of the reference
   (`IS NOT DISTINCT FROM`, :250) is Spark's ``eqNullSafe``.
 * ``published_view`` — error_view enrichment (run-checks.php:279-478,
@@ -32,9 +32,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import pipeline
-from .checks import available_checks
+from .checks import available_checks, owned_types
 from .data_tables import ERROR_NAMES
 from .errors import TXT_COLS
+from .lib import materialization_scope, materialize
 
 KEY = ["tile", "error_type", "object_type", "object_id", "lat", "lon"]
 
@@ -46,23 +47,12 @@ ERRORS_SCHEMA = (
 )
 
 
-def _decade_scope(executed_checks: list[int], et=None):
-    """error_type scope of a partial run (run-checks.php:192-218):
-    a run owns the decades of the checks it executed."""
-    et = F.col("error_type") if et is None else et
-    cond = F.lit(False)
-    for cid in executed_checks:
-        cond = cond | et.between(cid, cid + 9)
-    return cond
-
-
 def sync_errors(
     existing: DataFrame | None,
     fresh: DataFrame,
     executed_checks: list[int],
     run_seq: int,
     tile_scope: list[str] | None = None,
-    release_to: list | None = None,
 ) -> DataFrame:
     """Next state of the persistent errors table.
 
@@ -71,11 +61,6 @@ def sync_errors(
     ``tile_scope``: tiles this run actually executed (diff update) —
     vanished errors outside the scope keep their state, exactly like
     the reference's per-schema runs never clear other schemas' rows.
-    ``release_to``: optional list; when given, the twice-consumed
-    intermediate frame is persisted and appended here, and the caller
-    unpersists after materializing the result.  Without it nothing is
-    cached (the intermediate is computed twice) — no hidden state to
-    leak.
     """
     spark = fresh.sparkSession
     if existing is None:
@@ -97,7 +82,11 @@ def sync_errors(
         fresh_side = c if fresh_side is None else fresh_side | c
     old_side = existing["error_id"].isNotNull()
 
-    in_scope_old = _decade_scope(executed_checks, existing["error_type"])
+    # a partial run clears only the types its checks own
+    # (run-checks.php:192-218)
+    in_scope_old = F.lit(False)
+    for cid in executed_checks:
+        in_scope_old |= existing["error_type"].between(*owned_types(cid))
     if tile_scope is not None:
         in_scope_old = in_scope_old & existing["tile"].isin(list(tile_scope))
 
@@ -135,19 +124,14 @@ def sync_errors(
     # global sequence without funnelling every row through one task.
     # The prefix-sum window runs over the tiny tile-count frame
     # (~#tiles rows), not the error rows.
-    fresh_new = (
-        j.filter(~old_side & fresh_side)
-        .select(
+    # consumed by tile_off AND only_new
+    fresh_new = materialize(
+        j.filter(~old_side & fresh_side).select(
             *[f[k].alias(k) for k in KEY],
             f["f_msgid"].alias("msgid"),
             *[f[f"f_{c}"].alias(c) for c in TXT_COLS],
         )
-        .filter(_decade_scope(executed_checks))
     )
-    if release_to is not None:
-        # consumed by tile_off AND only_new: cache once, caller releases
-        fresh_new = fresh_new.persist()
-        release_to.append(fresh_new)
     w_tile = Window.partitionBy("tile").orderBy(
         *[F.col(k).asc_nulls_first() for k in KEY if k != "tile"]
     )
@@ -417,11 +401,12 @@ def run_persistent(
         )
         stage = os.path.join(state_dir, "stage", run_key, f"group_{gi}")
         timings: dict = {}
-        ev = pipeline.run_checks(
-            vg, check_ids, group, stage_dir=stage, timings=timings
-        )
         out_path = os.path.join(state_dir, "stage", run_key, f"ev_{gi}.parquet")
-        ev.write.mode("overwrite").parquet(out_path)
+        with materialization_scope():
+            ev = pipeline.run_checks(
+                vg, check_ids, group, stage_dir=stage, timings=timings
+            )
+            ev.write.mode("overwrite").parquet(out_path)
         n_rows = spark.read.parquet(out_path).count()
         with open(os.path.join(lineage_dir, f"{run_key}_group_{gi}.json"), "w") as f:
             json.dump(
@@ -451,25 +436,20 @@ def run_persistent(
     cur = current_errors_path(state_dir)
     if cur is not None:
         existing = spark.read.parquet(cur)
-    release: list = []
-    new_errors = sync_errors(
-        existing,
-        fresh,
-        check_ids,
-        run_seq,
-        tile_scope=[t.name for t in tiles] if only_tiles is not None else None,
-        release_to=release,
-    )
     # versioned write + atomic pointer swap: the new table is written
     # to its own directory (never overwriting the copy it reads), then
     # errors_CURRENT is flipped with an atomic rename — a crash at any
     # point leaves a readable previous version
     new_path = os.path.join(state_dir, f"errors_v{run_seq}.parquet")
-    try:
-        new_errors.write.mode("overwrite").parquet(new_path)
-    finally:
-        for df in release:
-            df.unpersist()
+    with materialization_scope():
+        sync_errors(
+            existing,
+            fresh,
+            check_ids,
+            run_seq,
+            tile_scope=[t.name for t in tiles] if only_tiles is not None else None,
+        ).write.mode("overwrite").parquet(new_path)
+    new_errors = spark.read.parquet(new_path)
     ptr = os.path.join(state_dir, "errors_CURRENT")
     tmp_ptr = ptr + ".tmp"
     with open(tmp_ptr, "w") as f:
@@ -505,7 +485,7 @@ def run_persistent(
                 continue
             if ver < run_seq - 1:
                 shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
-    return spark.read.parquet(new_path)
+    return new_errors
 
 
 def load_error_statistics(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -13,14 +13,19 @@ relational model) → run-checks (dataflow over it):
    check re-reads these views many times, so materializing once is the
    scale-correct choice — it also gives each check a small plan with
    parquet pushdown instead of a giant shared lineage.
-2. ``run_checks`` — union the check dataflows over the materialized
-   views and build the clipped error_view.
+2. ``run_checks`` — stage each check's rows over the materialized
+   views and build the clipped error_view from them.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
+import tempfile
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +34,7 @@ from . import checks as check_registry
 from .codec import OsmViews, decode
 from .datagen import GEN_VERSION
 from .errors import build_error_view
+from .lib import materialization_scope
 from .tiling import DEFAULT_MARGIN_M, DEFAULT_TILES, Tile, assign_tiles
 
 VIEW_NAMES = [
@@ -65,17 +71,6 @@ def dataset_tiles(dataset_dir: str) -> list[Tile] | None:
         return None
 
 
-def decode_and_tile(
-    spark: SparkSession,
-    dataset_dir: str,
-    tiles: list[Tile] | None = None,
-    margin_m: float = DEFAULT_MARGIN_M,
-) -> OsmViews:
-    docs = load_docs(spark, dataset_dir)
-    tiles = tiles or dataset_tiles(dataset_dir) or DEFAULT_TILES
-    return assign_tiles(decode(docs), tiles, margin_m)
-
-
 def prepare(
     spark: SparkSession,
     dataset_dir: str,
@@ -108,7 +103,6 @@ def prepare(
     persisted = [getattr(base, n) for n in VIEW_NAMES]
     for df in persisted:
         df.persist(StorageLevel.MEMORY_AND_DISK)
-    v = assign_tiles(base, tiles, margin_m)
     # Views are hive-partitioned by tile (Iceberg partition spec on a
     # cluster): a per-tile-group run prunes to its partitions instead
     # of scanning every file, and the layout matches the engine's
@@ -116,13 +110,15 @@ def prepare(
     # so each tile is written by exactly one task → one file per tile,
     # not tasks×tiles small files.
     n_files = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    for name in VIEW_NAMES:
-        getattr(v, name).repartition(n_files, "tile").write.mode(
-            "overwrite"
-        ).partitionBy("tile").parquet(f"{out}/{name}.parquet")
-    for df in persisted:
-        df.unpersist()
-    _write_helpers(spark, out, n_files)
+    with materialization_scope():
+        v = assign_tiles(base, tiles, margin_m)
+        for name in VIEW_NAMES:
+            getattr(v, name).repartition(n_files, "tile").write.mode(
+                "overwrite"
+            ).partitionBy("tile").parquet(f"{out}/{name}.parquet")
+        for df in persisted:
+            df.unpersist()
+        _write_helpers(spark, out, n_files)
     cell_stats = _cell_census(spark, out)
     with open(stamp, "w") as f:
         json.dump(
@@ -340,50 +336,41 @@ def run_checks(
     max_parallel: int = 8,
     timings: dict | None = None,
 ) -> DataFrame:
-    """Union the requested checks' _tmp_errors rows and build the
-    clipped error_view (deterministic columns).
+    """Run the requested checks and build the clipped error_view
+    (deterministic columns) from their _tmp_errors rows.
 
-    Two execution shapes:
-
-    * **single-plan** (default for small check sets): one lazy unioned
-      plan — fine for a handful of checks, but a 20+-check union is a
-      plan Catalyst optimizes slower than the checks run;
-    * **staged** (``stage_dir`` set): each check's _tmp_errors rows are
-      materialized to parquet by a *concurrently submitted* Spark job
-      (the reference's per-check temp-table style, run-checks.php:195-216,
-      crossed with its 6-connection parallelism), then one resolve/clip
-      pass reads them all back.  Concurrent job submission keeps the
-      cluster saturated while individual checks sit in narrow stages.
+    One shape: the reference's per-check temp tables
+    (run-checks.php:195-216), run in parallel like its 6 connections.
+    Each check's rows are written to parquet under ``stage_dir`` by a
+    concurrently submitted job inside its own
+    ``materialization_scope``, longest check first.  One resolve/clip
+    pass reads them back; its dedupe is materialized before this
+    returns, owned by the caller's scope if one is open.
+    ``stage_dir=None`` uses a temp dir that lives until the process
+    exits, since the returned frame reads from it.  ``timings``
+    receives each check's staged wall seconds.
     """
     registry = check_registry.available_checks()
     if check_ids is None:
         check_ids = sorted(registry)
     emit_types = check_registry.check_emits(check_ids)
     if stage_dir is None:
-        errors = None
-        for cid in check_ids:
-            e = registry[cid](v)
-            errors = e if errors is None else errors.unionByName(e)
-        return build_error_view(errors, v, tiles or DEFAULT_TILES, emit_types)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = v.nodes.sparkSession
+        stage_dir = tempfile.mkdtemp(prefix="kr_stage_")
+        atexit.register(shutil.rmtree, stage_dir, True)
     os.makedirs(stage_dir, exist_ok=True)
 
     def _stage(cid: int) -> str:
-        import time
-
         t0 = time.time()
         out = os.path.join(stage_dir, f"check_{cid:04d}.parquet")
-        registry[cid](v).write.mode("overwrite").parquet(out)
+        with materialization_scope():
+            registry[cid](v).write.mode("overwrite").parquet(out)
         if timings is not None:
             timings[cid] = round(time.time() - t0, 3)
         return out
 
     with ThreadPoolExecutor(max_workers=max_parallel) as ex:
         paths = list(ex.map(_stage, _lpt_order(check_ids)))
-    errors = spark.read.parquet(*paths)
+    errors = v.nodes.sparkSession.read.parquet(*paths)
     return build_error_view(errors, v, tiles or DEFAULT_TILES, emit_types)
 
 
@@ -395,9 +382,8 @@ def run_checks(
 # t=0 lets the cheap checks pack around them.  Ranking = the
 # round-5 BENCH/SOLO.md min-of-3 solo walls (re-measured after the
 # r5 materialization fixes moved 0400/0050/0290 down).  Checks not
-# listed
-# (e.g. a new check before it is ever measured) run after the listed
-# ones in id order — the schedule stays deterministic.
+# listed (e.g. a new check before it is ever measured) run after the
+# listed ones in id order — the schedule stays deterministic.
 _STAGE_COST_ORDER = [
     190, 280, 50, 220, 310, 70, 290, 400, 420, 60, 40, 130, 170, 270,
     360, 30, 370, 230, 210, 180, 20, 150, 350, 110, 160, 100, 380,
@@ -406,8 +392,6 @@ _STAGE_COST_ORDER = [
 
 
 def _lpt_order(check_ids: list[int]) -> list[int]:
-    if os.environ.get("KR_STAGE_ORDER") == "id":  # A/B escape hatch
-        return sorted(check_ids)
     rank = {cid: i for i, cid in enumerate(_STAGE_COST_ORDER)}
     return sorted(check_ids, key=lambda c: (rank.get(c, len(rank)), c))
 
@@ -422,9 +406,4 @@ def run_dataset(
 ) -> DataFrame:
     tiles = tiles or dataset_tiles(dataset_dir) or DEFAULT_TILES
     v = tiled_views(spark, dataset_dir, tiles, margin_m)
-    if stage_dir is None and (check_ids is None or len(check_ids) > 4):
-        # big check sets default to the staged/concurrent shape
-        import tempfile
-
-        stage_dir = tempfile.mkdtemp(prefix="kr_stage_")
     return run_checks(v, check_ids, tiles, stage_dir=stage_dir)

@@ -69,11 +69,10 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
         )
-        # lib.stable_checkpoint writes a reliable checkpoint per
-        # fixpoint iteration when KR_CHECKPOINT_DIR is set; without
-        # this, long-lived sessions accumulate checkpoint storage
-        # unboundedly (the cleaner GCs a checkpoint once its RDD is
-        # unreachable)
+        # with KR_CHECKPOINT_DIR set, every lib.materialize call writes
+        # reliable checkpoint files; a materialization scope frees only
+        # blocks, so the files go once the JVM garbage-collects their
+        # RDD
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -83,7 +82,7 @@ def get_spark(
         b = b.config(k, vv)
     spark = b.getOrCreate()
     # Reliable checkpoint dir for lineage-truncation points
-    # (lib.stable_checkpoint): on a cluster this must be shared
+    # (lib.materialize): on a cluster this must be shared
     # storage (HDFS/S3) so an executor loss can't orphan the
     # truncated lineage; unset, the engine falls back to
     # localCheckpoint (single-JVM local mode, where executor loss

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .codec import OsmViews
-from .lib import stable_checkpoint
+from .lib import materialize
 from .mercator import merc_lat, merc_lon, merc_x, merc_y
 
 
@@ -131,24 +131,22 @@ def assign_tiles(
     ).select("id", "tile")
 
     # way → tile if any member node is local (completeWays);
-    # persisted: reused by every downstream view and the relation loop
-    way_tile = (
+    # materialized: reused by every downstream view and the relation loop
+    way_tile = materialize(
         views.way_nodes.join(
             node_tile_direct.withColumnRenamed("id", "node_id"), "node_id"
         )
         .select("way_id", "tile")
         .distinct()
-        .persist()
     )
     way_nodes = views.way_nodes.join(way_tile, "way_id")
 
     # completeWays pulls every node of a local way into the tile
-    node_tile = (
+    node_tile = materialize(
         node_tile_direct.unionByName(
             way_nodes.select(F.col("node_id").alias("id"), "tile")
         )
         .distinct()
-        .persist()
     )
     nodes = views.nodes.join(node_tile, "id")
     node_tags = views.node_tags.join(
@@ -187,7 +185,7 @@ def assign_tiles(
     )
     has_nested = rm_nested.limit(1).count() > 0
     if has_nested:
-        rel_tile = stable_checkpoint(rel_tile)
+        rel_tile = materialize(rel_tile)
         for _ in range(max_relation_depth):
             grown = (
                 rm_nested.join(
@@ -197,10 +195,10 @@ def assign_tiles(
                 .distinct()
                 .join(rel_tile, ["id", "tile"], "left_anti")
             )
-            grown = stable_checkpoint(grown)
+            grown = materialize(grown)
             if grown.count() == 0:
                 break
-            rel_tile = stable_checkpoint(rel_tile.unionByName(grown))
+            rel_tile = materialize(rel_tile.unionByName(grown))
 
     relations = views.relations.join(rel_tile, "id")
     local_objs = local_n.unionByName(local_w).unionByName(

@@ -193,3 +193,58 @@ def test_explicit_run_seq_rejects_stale_record(spark, tiny_dir, tmp_path):
         lifecycle.run_persistent(
             spark, tiny_dir, state, check_ids=[20], run_seq=2
         )
+
+
+def test_oracle_types_within_owned_range(tiny_dir):
+    """Every error type a check's DuckDB oracle emits on the t world
+    lies in the range the check declares it owns — the range a partial
+    run's clear sweep covers."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from keepright_spark import oracles
+    from keepright_spark.checks import owned_types
+
+    con = duckdb.connect()
+    try:
+        for cid in entrymod.CHECKS_WITH_ORACLE:
+            sql = getattr(oracles, f"oracle_{cid:04d}")(tiny_dir)
+            types = con.sql(f"SELECT DISTINCT error_type FROM ({sql})").fetchall()
+            lo, hi = owned_types(cid)
+            outside = sorted(t for (t,) in types if not lo <= t <= hi)
+            assert not outside, f"check {cid} emits {outside} outside {lo}..{hi}"
+    finally:
+        con.close()
+
+
+def test_persistent_live_rows_equal_staged_0190(spark, tiny_dir, tmp_path):
+    """0190 emits crossings (191-198) and overlaps (201-208): the live
+    rows run_persistent commits equal the staged run_checks rows,
+    overlaps included."""
+    errs = lifecycle.run_persistent(
+        spark, tiny_dir, str(tmp_path / "state"), check_ids=[190]
+    )
+    live = errs.filter(~F.col("state").isin("cleared", "preliminary"))
+    staged = pipeline.run_dataset(spark, tiny_dir, [190])
+
+    def rows(df):
+        return sorted(tuple(str(x) for x in r) for r in df.select(ERROR_COLS).collect())
+
+    want = rows(staged)
+    assert any(r[1] == "201" for r in want), "fixture gap: no 0190 overlap row"
+    assert rows(live) == want
+
+
+def test_run_persistent_releases_materializations(spark, tiny_dir, tmp_path):
+    """Intermediates materialized during a persistent run are freed when
+    their owner's scope closes, not whenever the JVM happens to collect:
+    two back-to-back runs leave the session's persisted RDDs as they
+    found them.  Compared by id, because the JVM may collect an
+    unreachable RDD left by an earlier test while the runs go on."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    state = str(tmp_path / "state")
+    for _ in range(2):
+        lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[50, 190])
+    after = set(jsc.getPersistentRDDs().keySet())
+    assert after <= before, f"persisted RDDs left behind: {sorted(after - before)}"

@@ -126,24 +126,42 @@ def test_auto_partitioning_skips_repartition_on_low_tile_worlds(spark, tiny_dir)
 
 def test_staged_lpt_order():
     """Staged submission is longest-first (LPT makespan heuristic),
-    deterministic, and covers exactly the requested ids; unmeasured
-    checks go last in id order; KR_STAGE_ORDER=id restores ascending."""
-    import os
-
+    deterministic, and covers exactly the requested ids; the cost table
+    ranks exactly the registered checks; unmeasured checks go last in
+    id order."""
     from keepright_spark.pipeline import _STAGE_COST_ORDER, _lpt_order
 
+    assert len(set(_STAGE_COST_ORDER)) == len(_STAGE_COST_ORDER)
+    assert set(_STAGE_COST_ORDER) == set(available_checks())
     ids = sorted(_STAGE_COST_ORDER)
     out = _lpt_order(ids)
     assert sorted(out) == ids
-    # submission follows the measured cost table, longest first (the
-    # table itself is re-ranked from BENCH/SOLO.md each round — pin
-    # the contract, not a snapshot of the ranking)
-    assert out == _STAGE_COST_ORDER
     assert out[0] == 190  # the stable top pole across every round
     # unknown (unmeasured) check ids sort after every measured one
-    assert _lpt_order([20, 999, 190])[-1] == 999
-    os.environ["KR_STAGE_ORDER"] = "id"
-    try:
-        assert _lpt_order([190, 20, 50]) == [20, 50, 190]
-    finally:
-        del os.environ["KR_STAGE_ORDER"]
+    assert _lpt_order([20, 999, 998, 190]) == [190, 20, 998, 999]
+
+
+def test_materialization_only_through_lib():
+    """Intermediates are materialized only by lib.materialize, which
+    gives each one an owner and a lifetime.  The two input caches with
+    their own explicit lifetimes are the only exceptions: prepare's
+    decode persist/unpersist pair and the tiled_views view cache."""
+    import pathlib
+    import re
+
+    import keepright_spark
+
+    allowed = {
+        ("pipeline.py", "df.persist(StorageLevel.MEMORY_AND_DISK)"),
+        ("pipeline.py", "df = df.persist(StorageLevel.MEMORY_AND_DISK)"),
+    }
+    call = re.compile(r"\.(persist|cache|localCheckpoint|checkpoint)\(")
+    root = pathlib.Path(keepright_spark.__file__).parent
+    found = [
+        (str(p.relative_to(root)), line.strip())
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "lib.py"
+        for line in p.read_text().splitlines()
+        if call.search(line)
+    ]
+    assert set(found) <= allowed and len(found) == len(allowed), found
