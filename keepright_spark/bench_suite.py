@@ -1,43 +1,28 @@
-"""Bench worker: one isolated full-suite measurement.
-
-Each bench measurement runs in its OWN python process → its own JVM.
-Two reasons this is load-bearing, found the hard way:
-
-* JIT code-cache fairness — whole-stage codegen emits thousands of
-  classes per suite; successive measurements in one JVM inherit a
-  progressively fuller code cache until HotSpot disables compilation
-  ("CodeHeap ... compilation: disabled") and later runs execute
-  interpreted.  A fresh JVM per measurement (plus the enlarged
-  ReservedCodeCacheSize in session.get_spark) makes runs comparable.
-* spark.driver.extraJavaOptions only applies at JVM launch, so the
-  per-session conf is ineffective after the first getOrCreate of a
-  process.
+"""Bench worker: one timed check-suite run in its own process and JVM.
 
 Usage::
 
-    python -m keepright_spark.bench_suite <dataset_dir> <cores> \
-        <shuffle_partitions> <max_parallel> [check_ids] [nocache]
+    python -m keepright_spark.bench_suite <dataset_dir> <cores> [check_ids]
 
-``check_ids`` (comma list) restricts the worker to a check subset —
-the unit a fleet scheduler hands one executor; ``nocache`` skips the
-shared tile-partitioned view cache (a worker owning 4 checks would
-pay the full cache build for little reuse).
+``check_ids`` is a comma list (default: every registered check).  The
+session is ``get_spark``'s default at local[<cores>], as perfbench's
+worker runs it.  ``prepare`` is warm-up; the timed operation is the
+one perfbench's ``suite_t`` times: ``tiled_views``, then
+``run_checks``, then writing the error view to parquet.
 
-Prints ONE json line: {"rows": n, "wall": sec, "timings": {...}}.
-The timed region is the staged check suite + resolve + clip; dataset
-prepare is warm-up (the reference equally benches checks against a
-bulk-loaded, indexed database, not the loader).
+Prints ONE json line: ``{"rows", "s", "wall_s", "steal_s", "timings"}``,
+where ``s`` is the wall less host steal (perfbench's ``unstolen_s``)
+and ``timings`` holds each check's staged wall.
 
-Set ``KR_BENCH_PROFILE=<path>`` to enable the Spark UI for the run
-and dump per-stage aggregates (executor run/deserialize/GC time,
-dispatch gaps, task counts) from the REST API to ``<path>`` — the
-evidence base for the N→4N efficiency decomposition.
+One JVM per measurement matters: successive sessions in one process
+inherit a fuller JIT code cache, so their walls are not comparable.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -45,30 +30,9 @@ import time
 from . import pipeline
 from .session import get_spark
 
-BENCH_CONF = {
-    # KR_BENCH_ADAPTIVE=1 re-enables AQE (the production-session
-    # default, session.py) for A/B.  Measured r5 (solo 0190, scale m,
-    # local[32], interleaved, steal-bracketed): AQE ON 59.0/61.3 s vs
-    # OFF 31.8/50.0 s — at bench scale the per-stage re-planning +
-    # coalesce decisions cost more than the tiny-task overhead they
-    # remove, so the bench keeps AQE off.  Production (100 TB
-    # partitions, real skew) keeps it on via session.get_spark.
-    "spark.sql.adaptive.enabled": (
-        "true" if os.environ.get("KR_BENCH_ADAPTIVE") else "false"
-    ),
-    "spark.locality.wait": "0",
-    # shuffle compression stays at the Spark default (ON): measured on
-    # the xd world at 4 cores, lz4 shuffle is 12% faster end-to-end
-    # than uncompressed even with tmpfs local dirs — fewer bytes
-    # through the memory subsystem beats the codec cost, and the gap
-    # widens with core count (bandwidth is the shared resource).
-    "spark.scheduler.revive.interval": "1ms",
-}
-# Shuffle/spill files default to /tmp (root-overlay virtual disk here);
-# KR_BENCH_LOCAL_DIR=/dev/shm/... puts them on tmpfs for probes that
-# want storage out of the contention picture.
-if os.environ.get("KR_BENCH_LOCAL_DIR"):
-    BENCH_CONF["spark.local.dir"] = os.environ["KR_BENCH_LOCAL_DIR"]
+PERFBENCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"
+)
 
 
 def dump_profile(
@@ -207,53 +171,38 @@ def dump_profile(
 
 
 def main() -> None:
-    dataset_dir = sys.argv[1]
-    cores = int(sys.argv[2])
-    parts = int(sys.argv[3])
-    max_parallel = int(sys.argv[4])
-    check_ids = None
-    if len(sys.argv) > 5 and sys.argv[5] not in ("", "-"):
-        check_ids = [int(c) for c in sys.argv[5].split(",")]
-    cache = not (len(sys.argv) > 6 and sys.argv[6] == "nocache")
-    profile_path = os.environ.get("KR_BENCH_PROFILE")
-    conf = dict(BENCH_CONF)
-    if profile_path:
-        conf["spark.ui.enabled"] = "true"
-        conf["spark.ui.port"] = os.environ.get("KR_BENCH_UI_PORT", "4050")
-    spark = get_spark(
-        f"bench_{cores}c_{parts}p",
-        cores=cores,
-        shuffle_partitions=parts,
-        extra_conf=conf,
-    )
-    pipeline.prepare(spark, dataset_dir)  # idempotent, untimed
-    t_start = time.time()
-    v = pipeline.tiled_views(
-        spark, dataset_dir, share_partitioning="auto" if cache else False
-    )
-    tiles = pipeline.dataset_tiles(dataset_dir)
-    timings: dict = {}
-    t0 = time.time()
-    rows = pipeline.run_checks(
-        v,
-        check_ids,
-        tiles=tiles,
-        stage_dir=tempfile.mkdtemp(prefix="kr_bench_"),
-        max_parallel=max_parallel,
-        timings=timings,
-    ).count()
-    t_end = time.time()
-    if profile_path:
-        try:
-            dump_profile(spark, profile_path, t_end - t0, cores, since_epoch=t0)
-        except Exception as e:  # profiling must never fail the bench
-            print(f"profile dump failed: {e}", file=sys.stderr)
+    dataset_dir, cores = sys.argv[1], int(sys.argv[2])
+    check_ids = [int(c) for c in sys.argv[3].split(",")] if len(sys.argv) > 3 else None
+    sys.path.insert(0, PERFBENCH)
+    import worker as host  # perfbench's steal accounting
+
+    spark = get_spark(f"bench_{cores}c", cores=cores)
+    pipeline.prepare(spark, dataset_dir)  # warm-up, untimed
+    tmp = tempfile.mkdtemp(prefix="kr_bench_")
+    out = os.path.join(tmp, "errors.parquet")
+    try:
+        timings: dict = {}
+        t0, steal0 = time.monotonic(), host.steal_s()
+        v = pipeline.tiled_views(spark, dataset_dir)
+        ev = pipeline.run_checks(
+            v,
+            check_ids,
+            tiles=pipeline.dataset_tiles(dataset_dir),
+            stage_dir=os.path.join(tmp, "stage"),
+            timings=timings,
+        )
+        ev.write.parquet(out)
+        wall, steal = time.monotonic() - t0, host.steal_s() - steal0
+        rows = spark.read.parquet(out).count()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     print(
         json.dumps(
             {
                 "rows": rows,
-                "wall": round(t_end - t0, 2),
-                "wall_with_setup": round(t_end - t_start, 2),
+                "s": round(host.unstolen_s(wall, steal), 2),
+                "wall_s": round(wall, 2),
+                "steal_s": round(steal, 2),
                 "timings": timings,
             }
         ),

@@ -27,7 +27,8 @@ _open_scope: ContextVar[list[DataFrame] | None] = ContextVar(
 def materialization_scope():
     """Own what ``materialize`` returns inside the block; on exit free
     each frame's blocks through its checkpoint's backing ``LogicalRDD``
-    (``df.unpersist()`` does not free a localCheckpoint)."""
+    (``df.unpersist()`` does not free a localCheckpoint) and delete a
+    reliable checkpoint's files."""
     held: list[DataFrame] = []
     token = _open_scope.set(held)
     try:
@@ -35,7 +36,13 @@ def materialization_scope():
     finally:
         _open_scope.reset(token)
         for df in held:
-            df._jdf.queryExecution().logical().rdd().unpersist(False)
+            rdd = df._jdf.queryExecution().logical().rdd()
+            rdd.unpersist(False)
+            ckpt = rdd.getCheckpointFile()
+            if ckpt.isDefined():
+                sc = df.sparkSession.sparkContext
+                path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+                path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -49,9 +56,10 @@ def materialize(df: DataFrame) -> DataFrame:
     and frees it on exit.  The owners are the staged runner (each
     check's write), ``prepare`` (tile assignment and the view/helper
     writes) and ``run_persistent`` (each group's write, then
-    sync/commit).  Reliable-checkpoint files are left to
-    ``cleanCheckpoints`` (session.get_spark).  With no scope open the
-    result is not tracked and lives until the JVM garbage-collects it.
+    sync/commit).  Scope exit frees the blocks and deletes a reliable
+    checkpoint's files.  With no scope open the result is not tracked:
+    it lives until the JVM garbage-collects it, and ``cleanCheckpoints``
+    (session.get_spark) then deletes any files.
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir():

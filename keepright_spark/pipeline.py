@@ -61,8 +61,8 @@ def load_docs(spark: SparkSession, dataset_dir: str) -> DataFrame:
 
 
 def dataset_tiles(dataset_dir: str) -> list[Tile] | None:
-    """Tile list recorded in the dataset's MANIFEST.json (falls back
-    to DEFAULT_TILES when absent)."""
+    """Tile list recorded in the dataset's MANIFEST.json, or None when
+    absent."""
     try:
         with open(os.path.join(dataset_dir, "MANIFEST.json")) as f:
             m = json.load(f)
@@ -71,19 +71,18 @@ def dataset_tiles(dataset_dir: str) -> list[Tile] | None:
         return None
 
 
-def prepare(
-    spark: SparkSession,
-    dataset_dir: str,
-    tiles: list[Tile] | None = None,
-    margin_m: float = DEFAULT_MARGIN_M,
-    force: bool = False,
-) -> str:
+def _tiles(dataset_dir: str) -> list[Tile]:
+    """The tiling a dataset is prepared and clipped with."""
+    return dataset_tiles(dataset_dir) or DEFAULT_TILES
+
+
+def prepare(spark: SparkSession, dataset_dir: str) -> str:
     """Materialize the decoded + tiled views under
     ``<dataset_dir>/engine/`` (idempotent per generator version)."""
     out = os.path.join(dataset_dir, "engine")
     stamp = os.path.join(out, "engine_manifest.json")
     docs_sig = _docs_signature(dataset_dir)
-    if not force and os.path.exists(stamp):
+    if os.path.exists(stamp):
         try:
             with open(stamp) as f:
                 st = json.load(f)
@@ -98,7 +97,6 @@ def prepare(
     from pyspark.storagelevel import StorageLevel
 
     docs = load_docs(spark, dataset_dir)
-    tiles = tiles or dataset_tiles(dataset_dir) or DEFAULT_TILES
     base = decode(docs)
     persisted = [getattr(base, n) for n in VIEW_NAMES]
     for df in persisted:
@@ -111,7 +109,7 @@ def prepare(
     # not tasks×tiles small files.
     n_files = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     with materialization_scope():
-        v = assign_tiles(base, tiles, margin_m)
+        v = assign_tiles(base, _tiles(dataset_dir), DEFAULT_MARGIN_M)
         for name in VIEW_NAMES:
             getattr(v, name).repartition(n_files, "tile").write.mode(
                 "overwrite"
@@ -240,8 +238,6 @@ def _write_helpers(spark: SparkSession, out: str, n_files: int) -> None:
 def tiled_views(
     spark: SparkSession,
     dataset_dir: str,
-    tiles: list[Tile] | None = None,
-    margin_m: float = DEFAULT_MARGIN_M,
     share_partitioning: bool | str = "auto",
 ) -> OsmViews:
     """Views over the materialized engine tables (prepared on demand).
@@ -267,7 +263,7 @@ def tiled_views(
     forces it, ``False`` skips caching entirely (per-tile-group runs
     rely on partition pruning instead).
     """
-    out = prepare(spark, dataset_dir, tiles, margin_m)
+    out = prepare(spark, dataset_dir)
     seeds = None
     try:
         with open(os.path.join(dataset_dir, "MANIFEST.json")) as f:
@@ -280,19 +276,13 @@ def tiled_views(
             cell_stats = json.load(f).get("cell_stats")
     except (OSError, ValueError):
         pass
+    # tile count feeds spread()'s lumpy-placement gate (few tiles
+    # hashed into ~as-many partitions → balls-in-bins skew)
+    n_tiles = len(_tiles(dataset_dir))
     if cell_stats is not None:
-        # tile count feeds spread()'s lumpy-placement gate (few tiles
-        # hashed into ~as-many partitions → balls-in-bins skew)
-        known = dataset_tiles(dataset_dir)
-        cell_stats = {
-            **cell_stats,
-            "n_tiles": len(known) if known else len(DEFAULT_TILES),
-        }
+        cell_stats = {**cell_stats, "n_tiles": n_tiles}
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_tiles = (cell_stats or {}).get(
-        "n_tiles", len(dataset_tiles(dataset_dir) or DEFAULT_TILES)
-    )
     if share_partitioning == "auto":
         cache, tile_repart = True, n_tiles >= 4 * n_part
     else:
@@ -397,13 +387,7 @@ def _lpt_order(check_ids: list[int]) -> list[int]:
 
 
 def run_dataset(
-    spark: SparkSession,
-    dataset_dir: str,
-    check_ids: list[int] | None = None,
-    tiles: list[Tile] | None = None,
-    margin_m: float = DEFAULT_MARGIN_M,
-    stage_dir: str | None = None,
+    spark: SparkSession, dataset_dir: str, check_ids: list[int] | None = None
 ) -> DataFrame:
-    tiles = tiles or dataset_tiles(dataset_dir) or DEFAULT_TILES
-    v = tiled_views(spark, dataset_dir, tiles, margin_m)
-    return run_checks(v, check_ids, tiles, stage_dir=stage_dir)
+    v = tiled_views(spark, dataset_dir)
+    return run_checks(v, check_ids, _tiles(dataset_dir))

@@ -70,9 +70,9 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
         )
         # with KR_CHECKPOINT_DIR set, every lib.materialize call writes
-        # reliable checkpoint files; a materialization scope frees only
-        # blocks, so the files go once the JVM garbage-collects their
-        # RDD
+        # reliable checkpoint files; a materialization scope deletes
+        # them on exit, and this deletes an untracked call's files
+        # once the JVM garbage-collects its RDD
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

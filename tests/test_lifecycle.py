@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -248,3 +250,36 @@ def test_run_persistent_releases_materializations(spark, tiny_dir, tmp_path):
         lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[50, 190])
     after = set(jsc.getPersistentRDDs().keySet())
     assert after <= before, f"persisted RDDs left behind: {sorted(after - before)}"
+
+
+CHECKPOINT_CHILD = r"""
+import glob, json, sys
+from keepright_spark.lib import materialization_scope, materialize
+from keepright_spark.session import get_spark
+
+spark = get_spark("checkpoint_probe", cores=2)
+files = lambda: glob.glob(f"{sys.argv[1]}/*/rdd-*")
+df = spark.range(2000).selectExpr("id", "id % 7 AS k")
+with materialization_scope():
+    held = materialize(df)
+    rows = sorted(map(tuple, held.collect()))
+    inside = len(files())
+print(json.dumps({"inside": inside, "after": len(files()),
+                  "equal": rows == sorted(map(tuple, df.collect()))}))
+spark.stop()
+"""
+
+
+def test_reliable_checkpoint_files_freed_at_scope_exit(tmp_path):
+    """With KR_CHECKPOINT_DIR set, as the cluster recipe sets it,
+    ``materialize`` writes reliable checkpoint files; closing the owning
+    scope deletes them, and the materialized rows equal the input's."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ckpt = str(tmp_path / "ckpt")
+    env = {**os.environ, "KR_CHECKPOINT_DIR": ckpt,
+           "PYTHONPATH": os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p)}
+    p = subprocess.run([sys.executable, "-c", CHECKPOINT_CHILD, ckpt], cwd=repo,
+                       env=env, capture_output=True, text=True, timeout=300)
+    assert p.returncode == 0, p.stderr[-2000:]
+    got = json.loads(p.stdout.strip().splitlines()[-1])
+    assert got == {"inside": 1, "after": 0, "equal": True}, got
