@@ -20,10 +20,12 @@ re-crop each schema, re-run checks) for the docs-table world:
    the affected tiles (sync_errors ``tile_scope``), so untouched
    tiles keep their rows byte-identically.
 
-The engine views themselves re-materialize automatically: the
-``prepare`` stamp carries a docs-file signature
-(pipeline._docs_signature), so a replication diff that lands new
-parquet files invalidates the engine dir.
+The engine views follow the docs on their own: the ``prepare`` stamp
+carries a docs-file signature (pipeline._docs_signature) and the
+docs-store version its tables reflect, so after a replication upsert
+``prepare`` rewrites only the tile partitions the batch's changelog
+reaches, or re-derives every table when it cannot prove the batch
+tile-stable.
 
 At the north rule's scale the snapshot is an Iceberg table keyed by
 doc_id and the fingerprint join shuffles on doc_id only — no

@@ -14,13 +14,20 @@ Layout (under ``<dataset_dir>/docs_store/``)::
     BUCKETS.json            <- the store manifest (single commit point)
     b_empty/part-0.parquet  <- shared zero-row bucket (schema carrier)
     b07_v3/part-*.parquet   <- bucket 7, version 3
+    changes_v3.parquet      <- changelog: the doc_ids upsert v3 wrote
     stage_v4/...            <- in-flight write (orphaned by a crash)
 
-``BUCKETS.json`` maps bucket number -> current directory name and is
-flipped with one atomic ``os.replace`` — the whole upsert commits or
-doesn't (the round-4 two-rename swap had a crash window with no docs
-table at all; this has none).  Anything on disk that the manifest does
-not reference is a crash leftover and is swept before the next write.
+``BUCKETS.json`` maps bucket number -> current directory name and
+store version -> changelog file, and is flipped with one atomic
+``os.replace`` — the whole upsert commits or doesn't (the round-4
+two-rename swap had a crash window with no docs table at all; this
+has none).  Anything on disk that the manifest does not reference is
+a crash leftover and is swept before the next write.
+
+The changelogs of the last ``CHANGELOG_KEEP`` versions are kept:
+pipeline.prepare reads those after its stamp's version to refresh
+only what the batches changed (``changes_since``); ``migrate`` writes
+none, so a stamp older than the kept window rebuilds in full.
 
 Bucket function: ``pmod(xxhash64(doc_id), n_buckets)`` — deterministic
 across runs and sessions, computed JVM-side.  Untouched buckets are
@@ -39,6 +46,8 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +55,7 @@ STORE_DIR = "docs_store"
 MANIFEST = "BUCKETS.json"
 EMPTY_BUCKET = "b_empty"
 DEFAULT_BUCKETS = 64
+CHANGELOG_KEEP = 8  # store versions whose changelog stays on disk
 
 
 def store_root(dataset_dir: str) -> str:
@@ -94,15 +104,23 @@ def _write_manifest(root: str, man: dict) -> None:
 
 
 def _sweep_orphans(root: str, man: dict) -> None:
-    """Remove anything the manifest does not reference — staging dirs
-    and bucket versions left by a crash between write and commit, or
-    superseded versions left by a crash between commit and cleanup."""
-    live = set(man["buckets"].values()) | {EMPTY_BUCKET, MANIFEST}
+    """Remove anything the manifest does not reference — staging dirs,
+    bucket versions and changelogs left by a crash between write and
+    commit, superseded versions, and changelogs that left the kept
+    window."""
+    live = (
+        set(man["buckets"].values())
+        | set(man.get("changes", {}).values())
+        | {EMPTY_BUCKET, MANIFEST}
+    )
     for name in os.listdir(root):
-        if name not in live and not name.endswith(".tmp"):
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-        elif name.endswith(".tmp"):
-            os.remove(os.path.join(root, name))
+        path = os.path.join(root, name)
+        if name in live:
+            continue
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            os.remove(path)
 
 
 def _move_staged_buckets(
@@ -194,18 +212,18 @@ def upsert(
     A batch row replaces its previous doc version; an empty (or
     null) ``spans`` array is a tombstone.  Only buckets containing batch doc_ids are
     read or rewritten — cost is O(|batch| + |touched buckets|), never
-    O(|docs|).  The touched-bucket list is driver-side but bounded by
-    ``n_buckets`` (it is the partition work-list, the same shape as
-    diff.affected_tiles)."""
+    O(|docs|).  The batch's doc_ids are collected once (O(|batch|),
+    like the reference's osmosis change file): they give the touched
+    buckets, the partition work-list, and the version's changelog,
+    which commits with the buckets."""
     man = migrate(spark, dataset_dir, n_buckets)
     n = man["n_buckets"]
     root = store_root(dataset_dir)
     _sweep_orphans(root, man)
 
     b = batch.dropDuplicates(["doc_id"]).withColumn("bucket", bucket_expr(n))
-    touched = sorted(
-        r["bucket"] for r in b.select("bucket").distinct().collect()
-    )
+    ids = b.select("doc_id", "bucket").collect()
+    touched = sorted({r["bucket"] for r in ids})
     if not touched:
         return []
     cur_paths = [
@@ -233,19 +251,42 @@ def upsert(
         .parquet(stage)
     )
     new_buckets = _move_staged_buckets(root, stage, touched, version, man)
-    old_dirs = {
-        man["buckets"][str(t)] for t in touched
-    } - set(new_buckets.values()) - {EMPTY_BUCKET}
-    _write_manifest(
-        root,
-        {"n_buckets": n, "version": version, "buckets": new_buckets},
+    changes = {
+        v: f for v, f in man.get("changes", {}).items()
+        if int(v) > version - CHANGELOG_KEEP
+    }
+    changes[str(version)] = f"changes_v{version}.parquet"
+    pq.write_table(
+        pa.table({"doc_id": pa.array([r["doc_id"] for r in ids], pa.string())}),
+        os.path.join(root, changes[str(version)]),
     )
-    # post-commit cleanup of superseded versions (crash here → swept
-    # by the next upsert)
-    shutil.rmtree(stage, ignore_errors=True)
-    for d in old_dirs:
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    new_man = {"n_buckets": n, "version": version, "buckets": new_buckets,
+               "changes": changes}
+    _write_manifest(root, new_man)
+    # post-commit cleanup: the stage, superseded bucket versions and
+    # changelogs that left the kept window (a crash here → swept by
+    # the next upsert)
+    _sweep_orphans(root, new_man)
     return touched
+
+
+def changes_since(dataset_dir: str, version: int) -> list[str] | None:
+    """Sorted doc_ids upserted after store ``version``, or None when
+    the store is not past ``version`` or a changelog in between is no
+    longer kept (the caller then rebuilds from every doc)."""
+    man = read_manifest(dataset_dir)
+    if man is None or man["version"] <= version:
+        return None
+    kept = man.get("changes", {})
+    versions = [str(v) for v in range(version + 1, man["version"] + 1)]
+    if any(v not in kept for v in versions):
+        return None
+    root = store_root(dataset_dir)
+    ids: set[str] = set()
+    for v in versions:
+        t = pq.read_table(os.path.join(root, kept[v]), columns=["doc_id"])
+        ids.update(t.column("doc_id").to_pylist())
+    return sorted(ids)
 
 
 def signature_entries(dataset_dir: str):

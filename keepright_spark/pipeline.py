@@ -12,7 +12,10 @@ relational model) → run-checks (dataflow over it):
    tiled views out* (parquet here; Iceberg tables on a cluster).  Every
    check re-reads these views many times, so materializing once is the
    scale-correct choice — it also gives each check a small plan with
-   parquet pushdown instead of a giant shared lineage.
+   parquet pushdown instead of a giant shared lineage.  After a
+   replication upsert it refreshes only the tile partitions the
+   batch's changelog reaches (docs_store.changes_since), the twin of
+   the reference's apply-diff-then-re-crop cycle.
 2. ``run_checks`` — stage each check's rows over the materialized
    views and build the clipped error_view from them.
 """
@@ -22,20 +25,25 @@ from __future__ import annotations
 import atexit
 import json
 import os
+import re
 import shutil
 import tempfile
 import time
+from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from . import checks as check_registry
 from .codec import OsmViews, decode
 from .datagen import GEN_VERSION
 from .errors import build_error_view
-from .lib import materialization_scope
-from .tiling import DEFAULT_MARGIN_M, DEFAULT_TILES, Tile, assign_tiles
+from .lib import materialization_scope, materialize
+from .tiling import DEFAULT_MARGIN_M, DEFAULT_TILES, Tile, assign_tiles, padded_tiles
 
 VIEW_NAMES = [
     "nodes",
@@ -47,6 +55,11 @@ VIEW_NAMES = [
     "relation_members",
     "relation_tags",
 ]
+STAMP = "engine_manifest.json"
+# a doc id the refresh can key on: a node or way whose id decode's
+# bigint cast reads back as the same text (no sign, no leading zero,
+# at most 18 digits)
+_REFRESH_DOC_ID = re.compile(r"(node|way)/([1-9][0-9]{0,17})")
 
 
 def load_docs(spark: SparkSession, dataset_dir: str) -> DataFrame:
@@ -77,61 +90,348 @@ def _tiles(dataset_dir: str) -> list[Tile]:
 
 
 def prepare(spark: SparkSession, dataset_dir: str) -> str:
-    """Materialize the decoded + tiled views under
-    ``<dataset_dir>/engine/`` (idempotent per generator version)."""
+    """Bring the decoded + tiled engine tables under
+    ``<dataset_dir>/engine/`` up to date with the docs and return that
+    dir.
+
+    The stamp (``engine_manifest.json``) records the generator and
+    engine versions, the docs signature, the docs-store version the
+    tables reflect, how they were last brought up to date (``refresh``:
+    ``"full"`` or ``"delta"``), each table's Spark schema and the cell
+    census.  A stamp that matches the docs returns at once.  A stamp
+    behind the store whose every later changelog is kept refreshes
+    only the rows those batches reach (``_refresh``).  Anything else —
+    the first build, a plain ``docs.parquet``, a lost changelog, a
+    batch the refresh cannot prove tile-stable, a crash mid-refresh —
+    re-derives every table from all docs (``_build``)."""
+    from . import docs_store
+
     out = os.path.join(dataset_dir, "engine")
-    stamp = os.path.join(out, "engine_manifest.json")
     docs_sig = _docs_signature(dataset_dir)
-    if os.path.exists(stamp):
-        try:
-            with open(stamp) as f:
-                st = json.load(f)
-            if (
-                st.get("gen_version") == GEN_VERSION
-                and st.get("engine_version") == ENGINE_VERSION
-                and st.get("docs_sig", docs_sig) == docs_sig
-            ):
-                return out
-        except (json.JSONDecodeError, OSError):
-            pass
+    st = _read_stamp(out)
+    if st is not None and st.get("docs_sig") == docs_sig:
+        return out
+    man = docs_store.read_manifest(dataset_dir)
+    changed = None
+    if st is not None and man is not None and st.get("store_version") is not None:
+        changed = docs_store.changes_since(dataset_dir, st["store_version"])
+    docs = load_docs(spark, dataset_dir)
+    if changed is not None and _refresh(spark, dataset_dir, out, st, changed, docs):
+        refresh, schemas = "delta", st["schemas"]
+    else:
+        refresh, schemas = "full", _build(spark, dataset_dir, out, docs)
+    _write_stamp(
+        out,
+        {
+            "gen_version": GEN_VERSION,
+            "engine_version": ENGINE_VERSION,
+            "docs_sig": docs_sig,
+            "store_version": man["version"] if man is not None else None,
+            "refresh": refresh,
+            "schemas": schemas,
+            "cell_stats": _cell_census(spark, out, schemas),
+        },
+    )
+    return out
+
+
+def _read_stamp(out: str) -> dict | None:
+    """The engine stamp when it was written by this generator and
+    engine version, else None."""
+    try:
+        with open(os.path.join(out, STAMP)) as f:
+            st = json.load(f)
+    except (OSError, ValueError):
+        return None
+    if st.get("gen_version") != GEN_VERSION or st.get("engine_version") != ENGINE_VERSION:
+        return None
+    return st
+
+
+def _write_stamp(out: str, st: dict) -> None:
+    tmp = os.path.join(out, STAMP + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(st, f)
+    os.replace(tmp, os.path.join(out, STAMP))
+
+
+def _read_table(spark: SparkSession, out: str, name: str, schemas: dict) -> DataFrame:
+    """One engine table, read with the schema its stamp records (a
+    plain parquet read would launch a schema-inference job)."""
+    return spark.read.schema(StructType.fromJson(schemas[name])).parquet(
+        f"{out}/{name}.parquet"
+    )
+
+
+def _write_tiled(df: DataFrame, path: str, n_files: int | None) -> dict:
+    """Write ``df`` hive-partitioned by tile and return the schema a
+    read of the written table has (data columns nullable, tile last).
+
+    Views are partitioned by tile (Iceberg partition spec on a
+    cluster): a per-tile-group run prunes to its partitions instead of
+    scanning every file, and the layout matches the engine's universal
+    (tile, …) shuffle keys.  repartition(n, "tile") first so each tile
+    is written by exactly one task → one file per tile, not tasks×tiles
+    small files.  ``n_files=None`` skips that shuffle and writes ``df``'s
+    partitions as they are: the batch-scoped rewrite hands in one, so a
+    tile it rewrites stays one file, as after a full build."""
+    if n_files is not None:
+        df = df.repartition(n_files, "tile")
+    df.write.mode("overwrite").partitionBy("tile").parquet(path)
+    fields = [
+        StructField(f.name, f.dataType, True) for f in df.schema if f.name != "tile"
+    ]
+    return StructType(fields + [StructField("tile", StringType(), True)]).jsonValue()
+
+
+@contextmanager
+def _decoded(docs: DataFrame):
+    """``decode(docs)`` with its frames cached for the block: tile
+    assignment and every table write re-read them."""
     from pyspark.storagelevel import StorageLevel
 
-    docs = load_docs(spark, dataset_dir)
     base = decode(docs)
     persisted = [getattr(base, n) for n in VIEW_NAMES]
     for df in persisted:
         df.persist(StorageLevel.MEMORY_AND_DISK)
-    # Views are hive-partitioned by tile (Iceberg partition spec on a
-    # cluster): a per-tile-group run prunes to its partitions instead
-    # of scanning every file, and the layout matches the engine's
-    # universal (tile, …) shuffle keys.  repartition(n, "tile") first
-    # so each tile is written by exactly one task → one file per tile,
-    # not tasks×tiles small files.
-    n_files = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    with materialization_scope():
-        v = assign_tiles(base, _tiles(dataset_dir), DEFAULT_MARGIN_M)
-        for name in VIEW_NAMES:
-            getattr(v, name).repartition(n_files, "tile").write.mode(
-                "overwrite"
-            ).partitionBy("tile").parquet(f"{out}/{name}.parquet")
+    try:
+        yield base
+    finally:
         for df in persisted:
             df.unpersist()
-        _write_helpers(spark, out, n_files)
-    cell_stats = _cell_census(spark, out)
-    with open(stamp, "w") as f:
-        json.dump(
-            {
-                "gen_version": GEN_VERSION,
-                "engine_version": ENGINE_VERSION,
-                "docs_sig": docs_sig,
-                "cell_stats": cell_stats,
-            },
-            f,
+
+
+def _build(spark: SparkSession, dataset_dir: str, out: str, docs: DataFrame) -> dict:
+    """Full prepare: decode every doc, assign tiles, write the 8 views
+    and the 4 helpers; returns the tables' schemas."""
+    n_files = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    schemas = {}
+    with materialization_scope():
+        with _decoded(docs) as base:
+            v = assign_tiles(base, _tiles(dataset_dir), DEFAULT_MARGIN_M)
+            for name in VIEW_NAMES:
+                schemas[name] = _write_tiled(
+                    getattr(v, name), f"{out}/{name}.parquet", n_files
+                )
+        views = OsmViews(
+            **{name: _read_table(spark, out, name, schemas) for name in VIEW_NAMES}
         )
-    return out
+        for name, make in _helper_frames(views).items():
+            schemas[name] = _write_tiled(make(), f"{out}/{name}.parquet", n_files)
+    return schemas
 
 
-def _cell_census(spark: SparkSession, out: str) -> dict:
+def _refresh(
+    spark: SparkSession,
+    dataset_dir: str,
+    out: str,
+    st: dict,
+    changed: list[str],
+    docs: DataFrame,
+) -> bool:
+    """Batch-scoped prepare: rewrite only the rows the changed docs
+    reach, in only the tile partitions that hold them.  Returns False,
+    having written nothing, when the batch is not provably tile-stable;
+    the checks run cheapest first, so a batch with a relation or an id
+    decode cannot key on costs no Spark job and an added doc three
+    small ones.
+
+    The batch C (``changed``) bounds every scan of the old tables — a
+    data-induced predicate (*Pushing Data-Induced Predicates Through
+    Joins in Big-Data Clusters*, VLDB 2019).  Its nodes N_c and ways
+    W_c reach the ways W = W_c ∪ {ways whose old way_nodes reference a
+    node of N_c}.  Rows come from ``decode`` over the docs of C, of W
+    and of the nodes W references, and from the helper functions over
+    that subset; their tiles come from the old tables (a node's from
+    ``nodes``, a way's from its ``way_nodes`` rows, the same set as in
+    ``ways``).  That is valid when
+
+    1. C holds only node and way docs with ids ``_REFRESH_DOC_ID``
+       accepts (no relation);
+    2. every node of C was in the tables and keeps its padded-tile set
+       (tiling.padded_tiles on the old and new coordinates), or is a
+       tombstone no way or relation references;
+    3. every way of C was in the tables and keeps its ordered noderefs;
+    4. C adds no doc (2 and 3 check that each was in the tables).
+
+    A node's tiles are its direct tiles plus its ways' tiles, and a
+    way's tiles are the union of its nodes' direct tiles, so under 1-4
+    no object's tile set changes and no relation member appears or
+    disappears: the relation tables stay as they are.
+
+    Each rewritten partition is the old one less the affected ids plus
+    the rebuilt rows, written under ``engine/_delta/`` and swapped in
+    by directory rename once every write has finished.  The stamp is
+    invalidated before the first swap (``prepare`` writes the valid
+    one after the last), so a crash in between makes the next
+    ``prepare`` a full one."""
+    ids: dict[str, list[int]] = defaultdict(list)
+    for doc_id in changed:
+        m = _REFRESH_DOC_ID.fullmatch(doc_id)
+        if m is None:
+            return False  # a relation, or an id the refresh cannot key on
+        ids[m[1]].append(int(m[2]))
+    n_c, w_c = ids["node"], ids["way"]
+    schemas = st["schemas"]
+
+    def old(name: str) -> DataFrame:
+        return _read_table(spark, out, name, schemas)
+
+    # the old tables' view of the batch, collected: O(|batch|) rows
+    wn = old("way_nodes")
+    seeds = wn.filter(F.col("node_id").isin(n_c) | F.col("way_id").isin(w_c))
+    old_nodes, old_wn, old_members = _concurrently(
+        old("nodes")
+        .filter(F.col("id").isin(n_c))
+        .select("id", "tile", "lat", "lon")
+        .collect,
+        wn.join(seeds.select("way_id"), "way_id", "left_semi")
+        .select("way_id", "tile", "sequence_id", "node_id")
+        .collect,
+        old("relation_members")
+        .filter((F.col("member_type") == "N") & F.col("member_id").isin(n_c))
+        .select("member_id")
+        .collect,
+    )
+    node_tiles: dict[int, set] = defaultdict(set)
+    node_pos = {}
+    for r in old_nodes:
+        node_tiles[r.id].add(r.tile)
+        node_pos[r.id] = (r.lat, r.lon)
+    way_tiles: dict[int, set] = defaultdict(set)
+    refs: dict[tuple, list] = defaultdict(list)  # (way, tile) -> noderefs
+    for r in old_wn:
+        way_tiles[r.way_id].add(r.tile)
+        refs[r.way_id, r.tile].append((r.sequence_id, r.node_id))
+    old_refs = {w: sorted(refs[w, min(ts)]) for w, ts in way_tiles.items()}
+    if set(n_c) - node_tiles.keys() or set(w_c) - way_tiles.keys():
+        return False  # a doc the tables do not hold: added, or in no tile
+    referenced = {n for rs in old_refs.values() for _, n in rs}
+    referenced |= {r.member_id for r in old_members}
+    ways = sorted(way_tiles)  # W
+
+    want = {f"node/{n}" for n in n_c} | {f"way/{w}" for w in ways}
+    want |= {f"node/{n}" for rs in old_refs.values() for _, n in rs}
+    docs = docs.filter(F.col("doc_id").isin(sorted(want))).coalesce(1)
+    # batch-bounded: materialized once in one partition, so the decode's
+    # branches neither re-read the store's files nor fan out tasks
+    with materialization_scope(), _decoded(materialize(docs)) as new:
+        new_nodes, new_wn = _concurrently(
+            new.nodes.filter(F.col("id").isin(n_c)).select("id", "lat", "lon").collect,
+            new.way_nodes.filter(F.col("way_id").isin(w_c))
+            .select("way_id", "sequence_id", "node_id")
+            .collect,
+        )
+        new_pos = {r.id: (r.lat, r.lon) for r in new_nodes}
+        new_refs = defaultdict(list)
+        for r in new_wn:
+            new_refs[r.way_id].append((r.sequence_id, r.node_id))
+        tiles = _tiles(dataset_dir)
+        for n in n_c:
+            if n not in new_pos:
+                if n in referenced:
+                    return False  # tombstone of a node still in use
+            elif padded_tiles(*new_pos[n], tiles, DEFAULT_MARGIN_M) != padded_tiles(
+                *node_pos[n], tiles, DEFAULT_MARGIN_M
+            ):
+                return False
+        if any(sorted(new_refs[w]) != old_refs[w] for w in w_c):
+            return False
+
+        # (table, id column, ids to replace, partitions, make rows)
+        rewrites = []
+        if n_c:
+            nodes_of = {n: node_tiles[n] for n in n_c}
+            n_parts = sorted(set().union(*nodes_of.values()))
+            rewrites += [
+                ("nodes", "id", n_c, n_parts,
+                 lambda: _with_tiles(new.nodes, "id", nodes_of)),
+                ("node_tags", "node_id", n_c, n_parts,
+                 lambda: _with_tiles(new.node_tags, "node_id", nodes_of)),
+            ]
+        if ways:
+            w_parts = sorted(set().union(*way_tiles.values()))
+            sub = OsmViews(
+                nodes=new.nodes,
+                node_tags=new.node_tags,
+                ways=_with_tiles(new.ways, "id", way_tiles),
+                way_nodes=_with_tiles(new.way_nodes, "way_id", way_tiles),
+                way_tags=_with_tiles(new.way_tags, "way_id", way_tiles),
+                relations=new.relations,
+                relation_members=new.relation_members,
+                relation_tags=new.relation_tags,
+            )
+            rewrites += [
+                ("ways", "id", ways, w_parts, lambda: sub.ways),
+                ("way_nodes", "way_id", ways, w_parts, lambda: sub.way_nodes),
+                ("way_tags", "way_id", ways, w_parts, lambda: sub.way_tags),
+            ] + [
+                (name, "way_id", ways, w_parts, make)
+                for name, make in _helper_frames(sub).items()
+            ]
+        stage = os.path.join(out, "_delta")
+        shutil.rmtree(stage, ignore_errors=True)
+
+        def _stage(name, key, drop, parts, make) -> None:
+            kept = old(name).filter(
+                F.col("tile").isin(parts) & ~F.col(key).isin(drop)
+            )
+            _write_tiled(
+                kept.unionByName(make().select(kept.columns)).coalesce(1),
+                f"{stage}/{name}.parquet",
+                None,
+            )
+
+        # built and written in threads: the plans' analysis overlaps too
+        _concurrently(*[partial(_stage, *r) for r in rewrites])
+
+    _write_stamp(out, {**st, "docs_sig": None, "store_version": None})
+    for name, _, _, parts, _ in rewrites:
+        for t in parts:
+            _swap_partition(out, stage, name, f"tile={t}")
+        # a cached read of the table (tiled_views) must not serve the
+        # swapped-out files; a Spark overwrite does this on its own
+        spark.catalog.refreshByPath(f"{out}/{name}.parquet")
+    shutil.rmtree(stage, ignore_errors=True)
+    return True
+
+
+def _concurrently(*calls) -> list:
+    """Run the calls in threads and return their results.  Each runs
+    small Spark jobs, whose fixed costs (planning, scheduling, commit)
+    then overlap."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as ex:
+        futures = [ex.submit(call) for call in calls]
+        return [f.result() for f in futures]
+
+
+def _with_tiles(df: DataFrame, key: str, tiles_of: dict) -> DataFrame:
+    """``df``'s rows whose ``key`` is in ``tiles_of``, one per tile of
+    that id.  The id → tiles map is batch-bounded, so it rides in the
+    plan as a literal: no join, no exchange.  Its keys are bigint: a
+    lookup casts the id to the map's key type."""
+    pairs = [
+        (F.lit(i).cast("bigint"), F.array(*map(F.lit, sorted(ts))))
+        for i, ts in tiles_of.items()
+    ]
+    m = F.create_map(*[c for pair in pairs for c in pair])
+    return df.withColumn("tile", F.explode(m[F.col(key)]))
+
+
+def _swap_partition(out: str, stage: str, name: str, part: str) -> None:
+    """Replace ``engine/<name>/<part>`` with its staged rewrite; a
+    partition the rewrite left empty is dropped."""
+    cur = os.path.join(out, f"{name}.parquet", part)
+    new = os.path.join(stage, f"{name}.parquet", part)
+    if os.path.isdir(cur):
+        trash = os.path.join(stage, "_old", name)
+        os.makedirs(trash, exist_ok=True)
+        os.rename(cur, os.path.join(trash, part))
+    if os.path.isdir(new):
+        os.rename(new, cur)
+
+
+def _cell_census(spark: SparkSession, out: str, schemas: dict) -> dict:
     """Hottest-64 m-cell occupancy of nodes and way segments — the
     prepare-time skew statistic spatial.spread() gates its balancing
     exchange on (the cluster analog is Iceberg table stats, refreshed
@@ -153,14 +453,13 @@ def _cell_census(spark: SparkSession, out: str) -> dict:
     from .checks.check_0050 import RADIUS as MAX_CONSUMER_PAD_M
     from .spatial import bbox_cells, point_cells
 
-    nodes = spark.read.parquet(f"{out}/nodes.parquet")
+    nodes = _read_table(spark, out, "nodes", schemas)
     node_max = (
         nodes.groupBy("tile", point_cells(F.col("x"), F.col("y"), 64.0).alias("c"))
         .count()
         .agg(F.coalesce(F.max("count"), F.lit(0)))
-        .first()[0]
     )
-    segs = spark.read.parquet(f"{out}/h_segments.parquet")
+    segs = _read_table(spark, out, "h_segments", schemas)
     seg_max = (
         segs.select(
             "tile",
@@ -175,7 +474,9 @@ def _cell_census(spark: SparkSession, out: str) -> dict:
         .groupBy("tile", "c")
         .count()
         .agg(F.coalesce(F.max("count"), F.lit(0)))
-        .first()[0]
+    )
+    (node_max,), (seg_max,) = (
+        rows[0] for rows in _concurrently(node_max.collect, seg_max.collect)
     )
     return {"max_node_cell64": int(node_max), "max_seg_cell64": int(seg_max)}
 
@@ -183,7 +484,8 @@ def _cell_census(spark: SparkSession, out: str) -> dict:
 def _docs_signature(dataset_dir: str) -> str:
     """Cheap driver-side change signature of the docs table (file
     names + sizes + mtimes) — a replication diff lands as new parquet
-    files, so a stale engine dir is re-materialized automatically."""
+    files, so ``prepare`` sees a stale engine dir without reading a
+    row."""
     import hashlib
 
     from . import docs_store
@@ -212,27 +514,24 @@ def _docs_signature(dataset_dir: str) -> str:
 # oneways / lengths / segments reads the parquet instead of re-running
 # the shared aggregation (saves ~4 stages per consuming check job)
 HELPER_NAMES = ["h_layers", "h_oneways", "h_lengths", "h_segments"]
-ENGINE_VERSION = 6  # 6: seg census pad = largest consumer pad (0050 RADIUS)
+ENGINE_VERSION = 7  # 7: store version + table schemas in the stamp
 
 
-def _write_helpers(spark: SparkSession, out: str, n_files: int) -> None:
+def _helper_frames(v: OsmViews) -> dict:
+    """The 4 helper tables over ``v``, each made when called: each row
+    depends only on its own (tile, way), so a subset of ways yields
+    exactly their rows."""
     from .lib import find_oneways, way_layers, way_lengths
     from .spatial import way_segments
 
-    base = OsmViews(
-        **{name: spark.read.parquet(f"{out}/{name}.parquet") for name in VIEW_NAMES}
-    )
-    all_ways = base.ways.select("tile", F.col("id").alias("way_id"))
-    helpers = {
-        "h_layers": way_layers(base),
-        "h_oneways": find_oneways(base),
-        "h_lengths": way_lengths(base),
-        "h_segments": way_segments(base, all_ways),
+    return {
+        "h_layers": lambda: way_layers(v),
+        "h_oneways": lambda: find_oneways(v),
+        "h_lengths": lambda: way_lengths(v),
+        "h_segments": lambda: way_segments(
+            v, v.ways.select("tile", F.col("id").alias("way_id"))
+        ),
     }
-    for name, df in helpers.items():
-        df.repartition(n_files, "tile").write.mode("overwrite").partitionBy(
-            "tile"
-        ).parquet(f"{out}/{name}.parquet")
 
 
 def tiled_views(
@@ -270,17 +569,11 @@ def tiled_views(
             seeds = json.load(f).get("island_seeds")
     except (OSError, ValueError):
         pass
-    cell_stats = None
-    try:
-        with open(os.path.join(out, "engine_manifest.json")) as f:
-            cell_stats = json.load(f).get("cell_stats")
-    except (OSError, ValueError):
-        pass
+    st = _read_stamp(out)
     # tile count feeds spread()'s lumpy-placement gate (few tiles
     # hashed into ~as-many partitions → balls-in-bins skew)
     n_tiles = len(_tiles(dataset_dir))
-    if cell_stats is not None:
-        cell_stats = {**cell_stats, "n_tiles": n_tiles}
+    cell_stats = {**st["cell_stats"], "n_tiles": n_tiles}
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if share_partitioning == "auto":
@@ -288,8 +581,8 @@ def tiled_views(
     else:
         cache = tile_repart = bool(share_partitioning)
 
-    def _load(path: str) -> DataFrame:
-        df = spark.read.parquet(path)
+    def _load(name: str) -> DataFrame:
+        df = _read_table(spark, out, name, st["schemas"])
         if cache:
             from pyspark.storagelevel import StorageLevel
 
@@ -298,22 +591,16 @@ def tiled_views(
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
         return df
 
-    helpers = {}
-    for h in HELPER_NAMES:
-        hp = f"{out}/{h}.parquet"
-        if os.path.exists(hp):
-            helpers[h] = _load(hp)
     v = OsmViews(
-        **{name: _load(f"{out}/{name}.parquet") for name in VIEW_NAMES},
+        **{name: _load(name) for name in VIEW_NAMES + HELPER_NAMES},
         island_seeds=seeds,
         cell_stats=cell_stats,
-        **helpers,
     )
     if cache:
         # materialize caches eagerly: the staged runner submits check
         # jobs concurrently, and a cold cache would be computed N times
         # in parallel (wasted work, though not incorrect)
-        for name in VIEW_NAMES + [h for h in HELPER_NAMES if getattr(v, h) is not None]:
+        for name in VIEW_NAMES + HELPER_NAMES:
             getattr(v, name).count()
     return v
 

@@ -84,6 +84,23 @@ DEFAULT_TILES = [
 DEFAULT_MARGIN_M = 2000.0
 
 
+def _in_box(lat, lon, left, right, top, bottom):
+    """The node→tile range test, half-open on the padded box; the same
+    expression on Columns (assign_tiles' broadcast join) and on floats
+    (padded_tiles)."""
+    return (lat >= bottom) & (lat < top) & (lon >= left) & (lon < right)
+
+
+def padded_tiles(
+    lat: float | None, lon: float | None, tiles: list[Tile], margin_m: float
+) -> frozenset:
+    """Names of the tiles whose padded box holds (lat, lon) — a node's
+    direct tiles in assign_tiles, computed in Python."""
+    if lat is None or lon is None:
+        return frozenset()
+    return frozenset(t.name for t in tiles if _in_box(lat, lon, *t.padded(margin_m)))
+
+
 def _tiles_df(spark, tiles: list[Tile], margin_m: float) -> DataFrame:
     rows = []
     for t in tiles:
@@ -123,10 +140,10 @@ def assign_tiles(
     # node → tiles whose padded bbox contains it (broadcast range join)
     node_tile_direct = views.nodes.join(
         tdf,
-        (views.nodes.lat >= tdf.pbottom)
-        & (views.nodes.lat < tdf.ptop)
-        & (views.nodes.lon >= tdf.pleft)
-        & (views.nodes.lon < tdf.pright),
+        _in_box(
+            views.nodes.lat, views.nodes.lon,
+            tdf.pleft, tdf.pright, tdf.ptop, tdf.pbottom,
+        ),
         "inner",
     ).select("id", "tile")
 
