@@ -4,11 +4,16 @@ Re-expression of the reference's replication cycle
 (checks/planet.php:48-129: apply daily diffs with osmosis ``--simc``,
 re-crop each schema, re-run checks) for the docs-table world:
 
-1. **Changed-doc detection** — every committed run snapshots
-   (doc_id, span-sequence fingerprint, tiles) to
-   ``state_dir/doc_state.parquet``.  The next run full-outer-joins the
-   current fingerprints against the snapshot; added / removed /
-   changed docs fall out of a null-safe fingerprint comparison.
+1. **Changed-doc detection** — each cycle snapshots (doc_id,
+   span-sequence fingerprint, tiles) once, to
+   ``state_dir/doc_state_<docs_sig>.parquet`` keyed by the docs
+   signature (pipeline._docs_signature) that every run record also
+   stores.  The snapshot of the current docs is full-outer-joined
+   against the one of the last committed run; added / removed /
+   changed docs fall out of a null-safe fingerprint comparison.  Equal
+   signatures mean no change and cost no Spark job.  Only those two
+   snapshots are kept, and no pointer file: the run manifest
+   (lifecycle) is the one commit point.
 2. **Affected tiles** — the union of each changed doc's tiles in the
    *previous* snapshot and in the *current* views.  Margin semantics
    ride for free: an object inside a neighbouring tile's margin is
@@ -35,6 +40,7 @@ geometry work happens for unchanged docs.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,67 +78,51 @@ def doc_tiles(spark: SparkSession, dataset_dir: str) -> DataFrame:
     return u.groupBy("doc_id").agg(F.sort_array(F.collect_set("tile")).alias("tiles"))
 
 
-def snapshot_doc_state(
-    spark: SparkSession, dataset_dir: str, state_dir: str
-) -> None:
-    """Write the (doc_id, fp, tiles) snapshot the next diff run
-    compares against (atomic pointer, like the errors table)."""
-    docs = pipeline.load_docs(spark, dataset_dir)
-    snap = doc_fingerprints(docs).join(
-        doc_tiles(spark, dataset_dir), "doc_id", "left"
-    )
-    os.makedirs(state_dir, exist_ok=True)
-    # versioned dir + pointer: never overwrite the copy being read
-    ptr = os.path.join(state_dir, "doc_state_CURRENT")
-    ver = 1
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            cur = f.read().strip()
-        try:
-            ver = int(cur.rsplit("_v", 1)[1].split(".")[0]) + 1
-        except (IndexError, ValueError):
-            ver = 1
-    path = os.path.join(state_dir, f"doc_state_v{ver}.parquet")
-    snap.write.mode("overwrite").parquet(path)
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(os.path.basename(path))
-    os.replace(tmp, ptr)
-    prev = os.path.join(state_dir, f"doc_state_v{ver - 2}.parquet")
-    if os.path.exists(prev):
-        import shutil
-
-        shutil.rmtree(prev, ignore_errors=True)
+DOC_STATE_SCHEMA = "doc_id string, fp string, tiles array<string>"
 
 
-def _current_doc_state(spark, state_dir: str) -> DataFrame | None:
-    ptr = os.path.join(state_dir, "doc_state_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        path = os.path.join(state_dir, f.read().strip())
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
+def _doc_state_path(state_dir: str, docs_sig: str) -> str:
+    return os.path.join(state_dir, f"doc_state_{docs_sig}.parquet")
+
+
+def snapshot_doc_state(spark: SparkSession, dataset_dir: str, state_dir: str) -> str:
+    """Write the (doc_id, fp, tiles) snapshot of the current docs unless
+    it exists (a finished Spark write leaves ``_SUCCESS``); return its
+    path."""
+    path = _doc_state_path(state_dir, pipeline._docs_signature(dataset_dir))
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        docs = pipeline.load_docs(spark, dataset_dir)
+        doc_fingerprints(docs).join(
+            doc_tiles(spark, dataset_dir), "doc_id", "left"
+        ).write.mode("overwrite").parquet(path)
+    return path
 
 
 def affected_tiles(
     spark: SparkSession, dataset_dir: str, state_dir: str
 ) -> list[str] | None:
-    """Tiles touched by docs that changed since the last snapshot.
+    """Tiles touched by docs that changed since the last committed run.
 
-    None = no snapshot exists (caller must run everything); [] = no
-    changes.  The result is the partition work-list (one entry per
-    tile), so collecting it to the driver is the Iceberg
-    partition-listing analog, not a data collect."""
-    prev = _current_doc_state(spark, state_dir)
-    if prev is None:
+    Snapshots the current docs first (``snapshot_doc_state``).  None =
+    no committed run, or no snapshot of its docs (caller must run
+    everything); [] = no changes.  The result is the partition
+    work-list (one entry per tile), so collecting it to the driver is
+    the Iceberg partition-listing analog, not a data collect."""
+    from . import lifecycle
+
+    cur_path = snapshot_doc_state(spark, dataset_dir, state_dir)
+    rec = lifecycle.committed_run(state_dir)
+    prev_path = _doc_state_path(state_dir, rec["docs_sig"]) if rec else None
+    for name in os.listdir(state_dir):
+        p = os.path.join(state_dir, name)
+        if name.startswith("doc_state_") and p not in (cur_path, prev_path):
+            shutil.rmtree(p, ignore_errors=True)
+    if prev_path == cur_path:
+        return []
+    if prev_path is None or not os.path.exists(os.path.join(prev_path, "_SUCCESS")):
         return None
-    docs = pipeline.load_docs(spark, dataset_dir)
-    cur = doc_fingerprints(docs).join(
-        doc_tiles(spark, dataset_dir), "doc_id", "left"
-    )
-    p = prev.select(
+    cur = spark.read.schema(DOC_STATE_SCHEMA).parquet(cur_path)
+    p = spark.read.schema(DOC_STATE_SCHEMA).parquet(prev_path).select(
         F.col("doc_id"),
         F.col("fp").alias("p_fp"),
         F.col("tiles").alias("p_tiles"),
@@ -162,19 +152,16 @@ def diff_update(
     check_ids: list[int] | None = None,
     tile_group_size: int = 64,
 ) -> DataFrame:
-    """One replication cycle: detect changes, re-run only affected
-    tiles, commit state + a fresh snapshot.  Falls back to a full run
-    when no snapshot exists."""
+    """One replication cycle: snapshot and detect changes, then re-run
+    only the affected tiles and commit.  Falls back to a full run when
+    there is nothing to compare against."""
     from . import lifecycle
 
-    scope = affected_tiles(spark, dataset_dir, state_dir)
-    errors = lifecycle.run_persistent(
+    return lifecycle.run_persistent(
         spark,
         dataset_dir,
         state_dir,
         check_ids=check_ids,
         tile_group_size=tile_group_size,
-        only_tiles=scope,
+        only_tiles=affected_tiles(spark, dataset_dir, state_dir),
     )
-    snapshot_doc_state(spark, dataset_dir, state_dir)
-    return errors

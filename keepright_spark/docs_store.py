@@ -51,6 +51,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lib import write_json
+
 STORE_DIR = "docs_store"
 MANIFEST = "BUCKETS.json"
 EMPTY_BUCKET = "b_empty"
@@ -94,13 +96,6 @@ def read_docs(spark: SparkSession, dataset_dir: str) -> DataFrame:
     the bucket key lives in the directory name, not the rows, so the
     schema is exactly the plain ``docs.parquet`` schema)."""
     return spark.read.parquet(*bucket_paths(dataset_dir))
-
-
-def _write_manifest(root: str, man: dict) -> None:
-    tmp = os.path.join(root, MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(man, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(root, MANIFEST))  # the commit point
 
 
 def _sweep_orphans(root: str, man: dict) -> None:
@@ -193,7 +188,7 @@ def migrate(
     man["buckets"] = _move_staged_buckets(
         root, stage, list(range(n_buckets)), 1, man
     )
-    _write_manifest(root, man)
+    write_json(os.path.join(root, MANIFEST), man)  # the commit point
     # post-commit cleanup (retried by the next migrate/upsert call if
     # a crash lands here)
     shutil.rmtree(stage, ignore_errors=True)
@@ -262,7 +257,7 @@ def upsert(
     )
     new_man = {"n_buckets": n, "version": version, "buckets": new_buckets,
                "changes": changes}
-    _write_manifest(root, new_man)
+    write_json(os.path.join(root, MANIFEST), new_man)  # the commit point
     # post-commit cleanup: the stage, superseded bucket versions and
     # changelogs that left the kept window (a crash here → swept by
     # the next upsert)

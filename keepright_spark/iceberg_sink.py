@@ -185,20 +185,6 @@ WHEN NOT MATCHED AND size(s.spans) > 0
   THEN INSERT (doc_id, spans) VALUES (s.doc_id, s.spans)"""
 
 
-def merge_docs(spark: SparkSession, table: str, batch: DataFrame) -> None:
-    """Execute one docs upsert against an Iceberg ``table`` — raises
-    without an Iceberg runtime (this sandbox has none; docs_store is
-    the tested local twin)."""
-    if not iceberg_available(spark):
-        raise RuntimeError(
-            "no Iceberg runtime on the classpath; use "
-            "docs_store.upsert (bucketed parquet) or add "
-            "iceberg-spark-runtime + a catalog to the session conf"
-        )
-    batch.dropDuplicates(["doc_id"]).createOrReplaceTempView("_kr_docs_batch")
-    spark.sql(docs_merge_sql(table, "_kr_docs_batch"))
-
-
 def merge_sync_errors(
     spark: SparkSession,
     table: str,

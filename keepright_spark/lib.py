@@ -7,6 +7,8 @@ no Python UDFs anywhere in these paths.
 
 from __future__ import annotations
 
+import json
+import os
 from contextlib import contextmanager
 from contextvars import ContextVar
 
@@ -70,6 +72,18 @@ def materialize(df: DataFrame) -> DataFrame:
     if held is not None:
         held.append(out)
     return out
+
+
+def write_json(path: str, obj) -> None:
+    """Replace the JSON document at ``path`` in one step: it is written
+    to ``path.tmp`` and renamed over ``path``, so a reader or a crash
+    sees the previous document or the new one, never a torn one.  The
+    one commit primitive of the engine stamp, the docs-store manifest
+    and the run manifest."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1, sort_keys=True)
+    os.replace(tmp, path)
 
 
 def html_escape(col: Column) -> Column:

@@ -14,18 +14,40 @@ Re-expression of run-checks.php's state machinery over a parquet
   catalog), user_name, object_timestamp.
 * ``run_persistent`` — the per-tile-batch driver with checkpointed
   resume (north rule): tiles are processed in groups; each completed
-  group commits staged error rows + a lineage row (tile group, checks,
-  row count, duration, input counts) to the state directory, and a
-  re-run skips committed groups.  Run "timestamps" are deterministic
+  group stages its error rows + a lineage row (tile group, checks,
+  row count, duration) in the state directory, and a re-run of the
+  same world skips staged groups.  Run "timestamps" are deterministic
   run sequence numbers — the reference's NOW() would break replay.
 * ``node_density`` — the 0.1°-cell census (run-checks.php:488-514),
   also the skew census feeding hot-cell salting.
+
+State directory layout — ``run_manifest.json`` is the one commit
+point, replaced atomically (``lib.write_json``) like the reference's
+rename-swap of error_view_shadow (web/updateTables.php:18-27)::
+
+    run_manifest.json             last_run_seq + run_<seq> records
+                                  (groups, groups_done, scope,
+                                  docs_sig, committed)
+    errors_v<seq>.parquet         the errors table run <seq> wrote
+    error_statistics/run_<seq>.parquet
+    node_density.parquet
+    lineage/run_<seq>_group_<g>.json
+    stage/run_<seq>/              staged group rows (uncommitted run)
+
+A run writes its table, statistics and census first and commits by
+setting ``run_<seq>.committed`` and ``last_run_seq`` in one manifest
+replace.  Nothing is read through ``last_run_seq`` before that, so a
+crash anywhere leaves the previous run readable, and a resumed run
+rewrites only its own outputs.  The manifest keeps the committed
+run's record and any uncommitted ones; lineage and error_statistics
+keep the history.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -35,7 +57,9 @@ from . import pipeline
 from .checks import available_checks, owned_types
 from .data_tables import ERROR_NAMES
 from .errors import TXT_COLS
-from .lib import materialization_scope, materialize
+from .lib import materialization_scope, materialize, write_json
+
+MANIFEST = "run_manifest.json"
 
 KEY = ["tile", "error_type", "object_type", "object_id", "lat", "lon"]
 
@@ -175,33 +199,33 @@ def sync_errors(
     )
 
 
+def _error_names() -> list[tuple[int, str]]:
+    """(error_type, error_name) for every catalogued type and every type
+    a registered check owns.  A type with no catalogue entry takes its
+    owning check's base name: the named type family (a multiple of 10)
+    at or below it in the check's range, else the check's own name —
+    0190 owns crossings under 190 and overlaps under 200."""
+    names = dict(ERROR_NAMES)
+    for cid in available_checks():
+        lo, hi = owned_types(cid)
+        base = ERROR_NAMES.get(cid, "")
+        for t in range(lo, hi + 1):
+            if t % 10 == 0:
+                base = ERROR_NAMES.get(t, base)
+            names.setdefault(t, base)
+    return sorted(names.items())
+
+
 def published_view(errors: DataFrame, v) -> DataFrame:
     """error_view rows (run-checks.php:292-319 + name/user/timestamp
     resolution at :440-478): cleared/preliminary rows excluded."""
-    spark = errors.sparkSession
-    names = F.broadcast(
-        spark.createDataFrame(
-            [(k, n) for k, n in ERROR_NAMES.items()],
-            "error_type int, error_name string",
-        )
+    names = errors.sparkSession.createDataFrame(
+        _error_names(), "error_type int, error_name string"
     )
-    live = errors.filter(~F.col("state").isin("cleared", "preliminary"))
-    # decade fallback: subtype 191 → name of 190 if no exact entry
     live = (
-        live.join(names, "error_type", "left")
-        .join(
-            names.select(
-                (F.col("error_type")).alias("_decade"),
-                F.col("error_name").alias("_decade_name"),
-            ),
-            (F.col("error_type") - F.col("error_type") % 10) == F.col("_decade"),
-            "left",
-        )
-        .withColumn(
-            "error_name",
-            F.coalesce(F.col("error_name"), F.col("_decade_name"), F.lit("")),
-        )
-        .drop("_decade", "_decade_name")
+        errors.filter(~F.col("state").isin("cleared", "preliminary"))
+        .join(F.broadcast(names), "error_type", "left")
+        .withColumn("error_name", F.coalesce("error_name", F.lit("")))
     )
 
     def meta(df, id_col, otype):
@@ -241,6 +265,49 @@ def node_density(v) -> DataFrame:
     )
 
 
+def read_manifest(state_dir: str) -> dict | None:
+    """The run manifest of ``state_dir`` (module docstring), or None
+    before the first run."""
+    try:
+        with open(os.path.join(state_dir, MANIFEST)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def committed_run(state_dir: str) -> dict | None:
+    """The record of the last committed run, or None."""
+    m = read_manifest(state_dir) or {}
+    seq = m.get("last_run_seq")
+    return m[f"run_{seq}"] if seq else None
+
+
+def current_errors_path(state_dir: str) -> str | None:
+    """The committed errors table, ``errors_v<last_run_seq>.parquet``,
+    or None when no run has committed."""
+    seq = (read_manifest(state_dir) or {}).get("last_run_seq")
+    return os.path.join(state_dir, f"errors_v{seq}.parquet") if seq else None
+
+
+def _same_world(rec: dict, scope: list[str], docs_sig: str) -> bool:
+    """Run identity: a staged run may be resumed only over exactly the
+    tiles and the docs snapshot it was staged for — else its groups
+    describe a different world than the sync would commit against
+    (newly affected tiles would be silently skipped yet fall inside
+    the clear scope → false 'cleared' rows)."""
+    return rec.get("scope") == scope and rec.get("docs_sig") == docs_sig
+
+
+def _drop_run(state_dir: str, seq: int) -> None:
+    """Delete what uncommitted run ``seq`` wrote."""
+    for p in (
+        os.path.join(state_dir, "stage", f"run_{seq}"),
+        os.path.join(state_dir, f"errors_v{seq}.parquet"),
+        os.path.join(state_dir, "error_statistics", f"run_{seq}.parquet"),
+    ):
+        shutil.rmtree(p, ignore_errors=True)
+
+
 def run_persistent(
     spark: SparkSession,
     dataset_dir: str,
@@ -253,16 +320,12 @@ def run_persistent(
     """Full resumable run: staged per-tile-group check execution with
     lineage, then one state sync into the persistent errors table.
 
-    Returns the new persistent errors DataFrame (also written to
-    ``state_dir/errors_v<run_seq>.parquet`` and committed via the
-    ``errors_CURRENT`` pointer; previous runs' lineage under
-    ``state_dir/lineage/``)."""
+    Returns the new persistent errors DataFrame, written to
+    ``state_dir/errors_v<run_seq>.parquet`` and committed by the run
+    manifest (module docstring)."""
     os.makedirs(state_dir, exist_ok=True)
-    manifest_path = os.path.join(state_dir, "run_manifest.json")
-    manifest = {}
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            manifest = json.load(f)
+    manifest_path = os.path.join(state_dir, MANIFEST)
+    manifest = read_manifest(state_dir) or {}
     registry = available_checks()
     if check_ids is None:
         check_ids = sorted(registry)
@@ -277,58 +340,30 @@ def run_persistent(
             if cur is not None:
                 return spark.read.parquet(cur)
             return spark.createDataFrame([], ERRORS_SCHEMA)
-    # the run's identity: exactly which tiles it covers and which docs
-    # snapshot it reads — a resumed run must match BOTH, else its
-    # staged groups describe a different world than the sync would
-    # commit against (newly-affected tiles would be silently skipped
-    # yet fall inside the clear scope → false 'cleared' rows)
     scope_names = sorted(t.name for t in tiles)
     docs_sig = pipeline._docs_signature(dataset_dir)
     if run_seq is None:
-        # crash-safe resume: pick up the newest *uncommitted* run whose
-        # recorded scope + docs signature match this call's (its
-        # groups_done lets us skip completed tile groups).  EVERY other
-        # uncommitted run is stale — swept (record + staged dir), not
-        # just the newest, so crashed runs can't accumulate orphaned
-        # staged output.  last_run_seq is only advanced at commit, so a
-        # crash mid-run never orphans its staged groups.
-        import shutil
-
+        # crash-safe resume: pick up the newest uncommitted run of the
+        # same world (its groups_done lets us skip completed groups);
+        # every other uncommitted run is stale and swept with all it
+        # wrote, so crashed runs can't accumulate orphaned output
         seqs = sorted(
-            int(k.split("_", 1)[1])
-            for k in manifest
-            if k.startswith("run_") and k.split("_", 1)[1].isdigit()
+            int(k[4:]) for k in manifest if k.startswith("run_") and k[4:].isdigit()
         )
-        uncommitted = [
-            s for s in seqs if not manifest[f"run_{s}"].get("committed")
+        uncommitted = [s for s in seqs if not manifest[f"run_{s}"].get("committed")]
+        same = [
+            s for s in uncommitted
+            if _same_world(manifest[f"run_{s}"], scope_names, docs_sig)
         ]
-        stale = []
-        for s in reversed(uncommitted):
-            rec = manifest[f"run_{s}"]
-            stored_scope = rec.get("scope") or sorted(
-                {n for g in rec.get("groups", []) for n in g}
-            )
-            if (
-                run_seq is None
-                and stored_scope == scope_names
-                and rec.get("docs_sig", docs_sig) == docs_sig
-            ):
-                run_seq = s
-            else:
-                stale.append(s)
+        run_seq = same[-1] if same else None
+        stale = [s for s in uncommitted if s != run_seq]
         for s in stale:
-            shutil.rmtree(
-                os.path.join(state_dir, "stage", f"run_{s}"),
-                ignore_errors=True,
-            )
+            _drop_run(state_dir, s)
             del manifest[f"run_{s}"]
         if stale:
-            with open(manifest_path, "w") as f:
-                json.dump(manifest, f)
+            write_json(manifest_path, manifest)
         if run_seq is None:
-            run_seq = max(
-                int(manifest.get("last_run_seq", 0)), *uncommitted, 0
-            ) + 1
+            run_seq = max(int(manifest.get("last_run_seq", 0)), *uncommitted, 0) + 1
     # no shared cache here: each tile group filters the views to its
     # tiles, and over the raw tile-partitioned parquet that filter is
     # partition pruning — the group's scan touches only its partitions
@@ -344,22 +379,16 @@ def run_persistent(
     # grouping it crashed with, not one re-derived from its own
     # tile_group_size argument.
     run_key = f"run_{run_seq}"
-    rec = manifest.get(run_key, {})
+    rec = manifest.get(run_key)
     tile_by_name = {t.name: t for t in tiles}
-    if rec.get("groups"):
+    if rec is not None:
         # run identity holds for ANY reused record — including an
-        # explicitly passed run_seq: a stale record's staged groups
-        # describe a different world than the sync would commit
-        # against (mismatched tiles would be silently skipped yet fall
-        # inside the clear scope → false 'cleared' rows).  Raise
-        # instead of silently filtering.
-        stored_scope = rec.get("scope") or sorted(
-            {n for g in rec["groups"] for n in g}
-        )
-        if stored_scope != scope_names or rec.get("docs_sig", docs_sig) != docs_sig:
+        # explicitly passed run_seq: raise instead of silently
+        # filtering a stale record's groups
+        if rec.get("committed") or not _same_world(rec, scope_names, docs_sig):
             raise ValueError(
-                f"{run_key} was staged for a different world "
-                f"(stored: {len(stored_scope)} tiles, docs_sig="
+                f"{run_key} was committed or staged for a different world "
+                f"(stored: {len(rec.get('scope', []))} tiles, docs_sig="
                 f"{rec.get('docs_sig')!r}; current: {len(scope_names)} "
                 f"tiles, docs_sig={docs_sig!r}). Pass a fresh run_seq "
                 f"or delete the stale staged run."
@@ -370,16 +399,16 @@ def run_persistent(
             tiles[i : i + tile_group_size]
             for i in range(0, len(tiles), tile_group_size)
         ]
-        rec = manifest.setdefault(run_key, {})
-        rec["groups"] = [[t.name for t in g] for g in groups]
-        # run identity for crash-safe resume: scope + docs snapshot
-        rec["scope"] = scope_names
-        rec["docs_sig"] = docs_sig
-        with open(manifest_path, "w") as f:
-            json.dump(manifest, f)
-    done = set(manifest.get(run_key, {}).get("groups_done", []))
+        rec = manifest[run_key] = {
+            "groups": [[t.name for t in g] for g in groups],
+            "scope": scope_names,
+            "docs_sig": docs_sig,
+        }
+        write_json(manifest_path, manifest)
+    done = set(rec.get("groups_done", []))
     lineage_dir = os.path.join(state_dir, "lineage")
     os.makedirs(lineage_dir, exist_ok=True)
+    stage_root = os.path.join(state_dir, "stage", run_key)
 
     for gi, group in enumerate(groups):
         if gi in done:
@@ -399,12 +428,12 @@ def run_persistent(
                 if getattr(v, h) is not None
             },
         )
-        stage = os.path.join(state_dir, "stage", run_key, f"group_{gi}")
         timings: dict = {}
-        out_path = os.path.join(state_dir, "stage", run_key, f"ev_{gi}.parquet")
+        out_path = os.path.join(stage_root, f"ev_{gi}.parquet")
         with materialization_scope():
             ev = pipeline.run_checks(
-                vg, check_ids, group, stage_dir=stage, timings=timings
+                vg, check_ids, group, timings=timings,
+                stage_dir=os.path.join(stage_root, f"group_{gi}"),
             )
             ev.write.mode("overwrite").parquet(out_path)
         n_rows = spark.read.parquet(out_path).count()
@@ -422,24 +451,17 @@ def run_persistent(
                 f,
             )
         done.add(gi)
-        manifest.setdefault(run_key, {})["groups_done"] = sorted(done)
-        with open(manifest_path, "w") as f:
-            json.dump(manifest, f)
+        rec["groups_done"] = sorted(done)
+        write_json(manifest_path, manifest)
 
     fresh = spark.read.parquet(
-        *[
-            os.path.join(state_dir, "stage", run_key, f"ev_{gi}.parquet")
-            for gi in range(len(groups))
-        ]
+        *[os.path.join(stage_root, f"ev_{gi}.parquet") for gi in range(len(groups))]
     )
-    existing = None
     cur = current_errors_path(state_dir)
-    if cur is not None:
-        existing = spark.read.parquet(cur)
-    # versioned write + atomic pointer swap: the new table is written
-    # to its own directory (never overwriting the copy it reads), then
-    # errors_CURRENT is flipped with an atomic rename — a crash at any
-    # point leaves a readable previous version
+    existing = spark.read.parquet(cur) if cur is not None else None
+    # every output of the run goes to a path of its own, none of them
+    # referenced until the manifest commits: a resumed run overwrites
+    # only what it wrote itself and reads only the committed table
     new_path = os.path.join(state_dir, f"errors_v{run_seq}.parquet")
     with materialization_scope():
         sync_errors(
@@ -447,22 +469,16 @@ def run_persistent(
             fresh,
             check_ids,
             run_seq,
-            tile_scope=[t.name for t in tiles] if only_tiles is not None else None,
+            tile_scope=scope_names if only_tiles is not None else None,
         ).write.mode("overwrite").parquet(new_path)
     new_errors = spark.read.parquet(new_path)
-    ptr = os.path.join(state_dir, "errors_CURRENT")
-    tmp_ptr = ptr + ".tmp"
-    with open(tmp_ptr, "w") as f:
-        f.write(os.path.basename(new_path))
-    os.replace(tmp_ptr, ptr)
     # node-density census alongside (skew metrics)
     node_density(v).write.mode("overwrite").parquet(
         os.path.join(state_dir, "node_density.parquet")
     )
     # error-statistics timeline fill (generate_error_timeline.php -f):
-    # one snapshot dir per run_seq — overwrite makes re-running a
-    # crashed commit idempotent, the directory stays append-only
-    # across runs; comments.error_timeline reads the union
+    # one snapshot dir per committed run_seq; comments.error_timeline
+    # reads the union
     from .comments import error_statistics_fill
 
     error_statistics_fill(None, new_errors, run_seq).write.mode(
@@ -470,13 +486,20 @@ def run_persistent(
     ).parquet(
         os.path.join(state_dir, "error_statistics", f"run_{run_seq}.parquet")
     )
-    manifest.setdefault(run_key, {})["committed"] = True
+    # the commit: one atomic manifest replace.  The record of the run
+    # it supersedes is dropped, its staged groups after it; lineage and
+    # error_statistics keep the history
+    superseded = [
+        k for k, r in manifest.items() if k.startswith("run_") and r.get("committed")
+    ]
+    for k in superseded:
+        del manifest[k]
+    rec["committed"] = True
     manifest["last_run_seq"] = run_seq
-    with open(manifest_path, "w") as f:
-        json.dump(manifest, f)
+    write_json(manifest_path, manifest)
+    for k in superseded:
+        shutil.rmtree(os.path.join(state_dir, "stage", k), ignore_errors=True)
     # GC superseded versions (keep the previous one as a safety copy)
-    import shutil
-
     for name in os.listdir(state_dir):
         if name.startswith("errors_v") and name.endswith(".parquet"):
             try:
@@ -492,26 +515,13 @@ def load_error_statistics(spark: SparkSession, state_dir: str) -> DataFrame:
     """The accumulated error_statistics table (one snapshot per
     committed run) — feed to comments.error_timeline for the series."""
     root = os.path.join(state_dir, "error_statistics")
+    last = (read_manifest(state_dir) or {}).get("last_run_seq", 0)
     paths = sorted(
         os.path.join(root, n) for n in os.listdir(root)
+        if int(n[len("run_"):-len(".parquet")]) <= last
     ) if os.path.isdir(root) else []
     if not paths:
         from .comments import STATS_SCHEMA
 
         return spark.createDataFrame([], STATS_SCHEMA)
     return spark.read.parquet(*paths)
-
-
-def current_errors_path(state_dir: str) -> str | None:
-    """Resolve the live errors table via the errors_CURRENT pointer
-    file (atomic-rename committed); falls back to the legacy
-    errors.parquet path for pre-pointer state dirs."""
-    ptr = os.path.join(state_dir, "errors_CURRENT")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            rel = f.read().strip()
-        p = os.path.join(state_dir, rel)
-        if os.path.exists(p):
-            return p
-    legacy = os.path.join(state_dir, "errors.parquet")
-    return legacy if os.path.exists(legacy) else None

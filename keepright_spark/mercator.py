@@ -129,10 +129,5 @@ def merc_y_udf(lat: pd.Series) -> pd.Series:
 
 
 @pandas_udf(DoubleType())
-def merc_lon_udf(x: pd.Series) -> pd.Series:
-    return pd.Series(merc_lon(x.to_numpy(dtype=np.float64)))
-
-
-@pandas_udf(DoubleType())
 def merc_lat_udf(y: pd.Series) -> pd.Series:
     return pd.Series(merc_lat(y.to_numpy(dtype=np.float64)))

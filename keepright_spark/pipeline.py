@@ -42,7 +42,7 @@ from . import checks as check_registry
 from .codec import OsmViews, decode
 from .datagen import GEN_VERSION
 from .errors import build_error_view
-from .lib import materialization_scope, materialize
+from .lib import materialization_scope, materialize, write_json
 from .tiling import DEFAULT_MARGIN_M, DEFAULT_TILES, Tile, assign_tiles, padded_tiles
 
 VIEW_NAMES = [
@@ -120,8 +120,8 @@ def prepare(spark: SparkSession, dataset_dir: str) -> str:
         refresh, schemas = "delta", st["schemas"]
     else:
         refresh, schemas = "full", _build(spark, dataset_dir, out, docs)
-    _write_stamp(
-        out,
+    write_json(
+        os.path.join(out, STAMP),
         {
             "gen_version": GEN_VERSION,
             "engine_version": ENGINE_VERSION,
@@ -146,13 +146,6 @@ def _read_stamp(out: str) -> dict | None:
     if st.get("gen_version") != GEN_VERSION or st.get("engine_version") != ENGINE_VERSION:
         return None
     return st
-
-
-def _write_stamp(out: str, st: dict) -> None:
-    tmp = os.path.join(out, STAMP + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(st, f)
-    os.replace(tmp, os.path.join(out, STAMP))
 
 
 def _read_table(spark: SparkSession, out: str, name: str, schemas: dict) -> DataFrame:
@@ -385,7 +378,8 @@ def _refresh(
         # built and written in threads: the plans' analysis overlaps too
         _concurrently(*[partial(_stage, *r) for r in rewrites])
 
-    _write_stamp(out, {**st, "docs_sig": None, "store_version": None})
+    write_json(os.path.join(out, STAMP),
+               {**st, "docs_sig": None, "store_version": None})
     for name, _, _, parts, _ in rewrites:
         for t in parts:
             _swap_partition(out, stage, name, f"tile={t}")
@@ -506,6 +500,9 @@ def _docs_signature(dataset_dir: str) -> str:
                 except OSError:
                     continue
                 h.update(f"{fn}:{st.st_size}:{st.st_mtime_ns}".encode())
+    elif os.path.isfile(docs):
+        st = os.stat(docs)
+        h.update(f"docs.parquet:{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:16]
 
 
@@ -605,21 +602,23 @@ def tiled_views(
     return v
 
 
+STAGE_SLOTS = 8  # concurrent check jobs (BENCH/BASELINE.md: 6-8 is flat)
+
+
 def run_checks(
     v: OsmViews,
     check_ids: list[int] | None = None,
     tiles: list[Tile] | None = None,
     stage_dir: str | None = None,
-    max_parallel: int = 8,
     timings: dict | None = None,
 ) -> DataFrame:
     """Run the requested checks and build the clipped error_view
     (deterministic columns) from their _tmp_errors rows.
 
     One shape: the reference's per-check temp tables
-    (run-checks.php:195-216), run in parallel like its 6 connections.
-    Each check's rows are written to parquet under ``stage_dir`` by a
-    concurrently submitted job inside its own
+    (run-checks.php:195-216), run ``STAGE_SLOTS`` at a time like its
+    6 connections.  Each check's rows are written to parquet under
+    ``stage_dir`` by a concurrently submitted job inside its own
     ``materialization_scope``, longest check first.  One resolve/clip
     pass reads them back; its dedupe is materialized before this
     returns, owned by the caller's scope if one is open.
@@ -645,14 +644,14 @@ def run_checks(
             timings[cid] = round(time.time() - t0, 3)
         return out
 
-    with ThreadPoolExecutor(max_workers=max_parallel) as ex:
+    with ThreadPoolExecutor(max_workers=STAGE_SLOTS) as ex:
         paths = list(ex.map(_stage, _lpt_order(check_ids)))
     errors = v.nodes.sparkSession.read.parquet(*paths)
     return build_error_view(errors, v, tiles or DEFAULT_TILES, emit_types)
 
 
 # Longest-first submission order for the staged runner (LPT makespan
-# heuristic).  With max_parallel=8 slots, ascending-id submission
+# heuristic).  With STAGE_SLOTS=8 slots, ascending-id submission
 # starts the most expensive check (0190, staged wall ~42s on scale m
 # — comparable to the whole suite's 54-63s wall) only in the 16th
 # slot, so its tail extends the makespan; starting the long poles at

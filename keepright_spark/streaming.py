@@ -12,18 +12,20 @@ cycle:
 1. **upsert** the batch into the dataset's docs table (a doc row
    replaces its previous version; an empty ``spans`` array is a
    tombstone and deletes the doc);
-2. **diff-detect** changed docs via the span-sequence fingerprint
-   snapshot (diff.affected_tiles) — the upsert itself does not decide
-   what re-runs, the fingerprints do, so re-delivered duplicates cost
-   nothing;
+2. **diff-detect** changed docs by comparing the span-sequence
+   fingerprint snapshot of the current docs with the one of the last
+   committed run (diff.affected_tiles) — the upsert itself does not
+   decide what re-runs, the fingerprints do, so re-delivered
+   duplicates cost nothing;
 3. **scoped re-run** of only the affected tiles with the persistent
    error lifecycle (clears stay inside the touched tiles).
 
 Exactly-once shape: the stream checkpoints its source offsets
 (``checkpoint/`` under the state dir), and every downstream commit is
-already idempotent — run_persistent resumes by manifest, sync_errors
-swaps an atomic pointer, and re-processing an already-applied drop
-yields zero changed fingerprints → zero re-run scope.  On a cluster
+already idempotent — run_persistent resumes by its run manifest and
+commits by replacing it atomically, and re-processing an
+already-applied drop yields zero changed fingerprints → zero re-run
+scope.  On a cluster
 both the docs table and the errors table are Iceberg (MERGE INTO —
 iceberg_sink.py); here the docs upsert is bucket-scoped with one
 atomic manifest commit (docs_store.py) — only buckets containing

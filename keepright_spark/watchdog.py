@@ -13,10 +13,11 @@ dataset + state-directory artifacts:
   schema_max_age); here the input is the docs.parquet directory.
 * result freshness + floors — watchdog.php:57-88 checks result files
   exist, are big enough and young enough; here the results are the
-  committed errors table (via the errors_CURRENT pointer), the lineage
-  rows, and optionally the TSV export directory.  The per-tile-group
-  floor (every group emitted ≥ ``min_rows_per_group`` error rows)
-  replaces the error_view_minimum_filesize byte floor.
+  committed errors table and run manifest (read through
+  ``lifecycle``), the lineage rows, and optionally the TSV export
+  directory.  The per-tile-group floor (every group emitted ≥
+  ``min_rows_per_group`` error rows) replaces the
+  error_view_minimum_filesize byte floor.
 
 All filesystem checks are driver-side metadata reads — no Spark jobs
 except the eight LIMIT-1 probes, which are partition-pruned scans.
@@ -101,7 +102,7 @@ def run_watchdog(
 ) -> list[str]:
     """Evaluate every health rule; returns the issue list (watchdog.php
     prints it).  With ``strict`` raises WatchdogError when non-empty."""
-    from .lifecycle import current_errors_path
+    from .lifecycle import current_errors_path, read_manifest
 
     cfg = {**DEFAULT_LIMITS, **(limits or {})}
     now = time.time() if now is None else now
@@ -140,15 +141,12 @@ def run_watchdog(
         cur = current_errors_path(state_dir)
         if cur is None:
             issues.append(f"no committed errors table under {state_dir}")
-        elif len(os.listdir(cur)) == 0:
-            issues.append(f"errors table {cur} is empty")
+        elif not os.path.isdir(cur) or not os.listdir(cur):
+            issues.append(f"errors table {cur} is missing or empty")
 
-        manifest_path = os.path.join(state_dir, "run_manifest.json")
-        manifest = {}
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                manifest = json.load(f)
-        else:
+        manifest = read_manifest(state_dir)
+        if manifest is None:
+            manifest = {}
             issues.append(f"no run manifest under {state_dir}")
         last = int(manifest.get("last_run_seq", 0))
         if last and not manifest.get(f"run_{last}", {}).get("committed"):

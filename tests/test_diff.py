@@ -115,3 +115,14 @@ def test_diff_update_scoped_and_state_identical(spark, tiny_dir, tmp_path):
     assert diff.affected_tiles(spark, ds, state) == []
     e3 = diff.diff_update(spark, ds, state, check_ids=CHECKS)
     assert e3.count() == e2.count()
+
+
+def test_docs_signature_sees_a_rewritten_docs_file(tmp_path):
+    """A single-file docs.parquet is part of the docs signature, so
+    rewriting it is a change to prepare and to affected_tiles."""
+    ds = tmp_path / "ds"
+    ds.mkdir()
+    (ds / "docs.parquet").write_bytes(b"v1")
+    before = pipeline._docs_signature(str(ds))
+    (ds / "docs.parquet").write_bytes(b"v2 longer")
+    assert pipeline._docs_signature(str(ds)) != before

@@ -103,8 +103,8 @@ def test_persistent_run_resume(spark, tiny_dir, tmp_path):
 
 def test_crash_resume_uncommitted_run(spark, tiny_dir, tmp_path):
     """A restart after a crash mid-run must resume the SAME run_seq,
-    reuse its committed tile groups, and finish with a committed
-    errors table behind the atomic errors_CURRENT pointer."""
+    reuse its completed tile groups, and finish with a committed
+    errors table named by the run manifest."""
     import shutil
 
     state = str(tmp_path / "state")
@@ -115,14 +115,13 @@ def test_crash_resume_uncommitted_run(spark, tiny_dir, tmp_path):
     mp = os.path.join(state, "run_manifest.json")
     with open(mp) as f:
         m = json.load(f)
-    # simulate a crash after all tile groups committed but before the
-    # table commit: drop the committed flag, pointer and table
+    # simulate a crash after all tile groups completed but before the
+    # table was written: drop the commit and the table
     del m["run_1"]["committed"]
     m.pop("last_run_seq", None)
     with open(mp, "w") as f:
         json.dump(m, f)
     shutil.rmtree(os.path.join(state, "errors_v1.parquet"))
-    os.remove(os.path.join(state, "errors_CURRENT"))
     lineage_mtimes = {
         f: os.path.getmtime(os.path.join(state, "lineage", f))
         for f in os.listdir(os.path.join(state, "lineage"))
@@ -133,11 +132,77 @@ def test_crash_resume_uncommitted_run(spark, tiny_dir, tmp_path):
         m = json.load(f)
     assert m["last_run_seq"] == 1 and m["run_1"]["committed"]
     assert e2.count() == n1
-    with open(os.path.join(state, "errors_CURRENT")) as f:
-        assert f.read().strip() == "errors_v1.parquet"
+    assert lifecycle.current_errors_path(state) == os.path.join(
+        state, "errors_v1.parquet"
+    )
     # completed tile groups were skipped, not recomputed
     for f_, mt in lineage_mtimes.items():
         assert os.path.getmtime(os.path.join(state, "lineage", f_)) == mt
+
+
+def _rows(df):
+    return sorted(
+        tuple(str(x) for x in r) for r in df.select(sorted(df.columns)).collect()
+    )
+
+
+def test_rerun_after_crash_before_commit(spark, tiny_dir, tmp_path):
+    """A crash after the run wrote its errors table, statistics and
+    census but before the manifest commit leaves every table on disk
+    and the manifest without the commit.  The rerun resumes the run,
+    reads no uncommitted table and commits the same rows."""
+    state = str(tmp_path / "state")
+    want = _rows(lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[20]))
+    mp = os.path.join(state, "run_manifest.json")
+    with open(mp) as f:
+        m = json.load(f)
+    del m["run_1"]["committed"]
+    del m["last_run_seq"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+
+    got = _rows(lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[20]))
+    with open(mp) as f:
+        m = json.load(f)
+    assert m["last_run_seq"] == 1 and m["run_1"]["committed"]
+    assert got == want
+    assert _rows(spark.read.parquet(lifecycle.current_errors_path(state))) == want
+
+
+def test_manifest_write_failure_keeps_previous_manifest(spark, tiny_dir, tmp_path,
+                                                        monkeypatch):
+    """A manifest write that fails halfway leaves the previous manifest
+    on disk, whole."""
+    state = str(tmp_path / "state")
+    lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[20])
+    mp = os.path.join(state, "run_manifest.json")
+    with open(mp) as f:
+        before = json.load(f)
+
+    real_dumps = json.dumps
+
+    def torn_dump(obj, f, **kw):
+        text = real_dumps(obj, **kw)
+        f.write(text[: len(text) // 2])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[20])
+    monkeypatch.undo()
+    with open(mp) as f:
+        assert json.load(f) == before
+
+
+def test_manifest_keeps_one_committed_record(spark, tiny_dir, tmp_path):
+    """Committing a run drops the record of the run it supersedes."""
+    state = str(tmp_path / "state")
+    for _ in range(3):
+        lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[20])
+    m = lifecycle.read_manifest(state)
+    assert [k for k in m if k.startswith("run_")] == ["run_3"]
+    assert m["last_run_seq"] == 3 and m["run_3"]["committed"]
+    assert os.listdir(os.path.join(state, "stage")) == ["run_3"]
 
 
 def test_id_assignment_distributed_and_dense(spark):
@@ -171,6 +236,31 @@ def test_published_view(spark, tiny_dir):
         assert r["error_name"] == "multiple nodes on the same spot"
         assert r["user_name"] and r["user_name"].startswith("user_")
         assert r["object_timestamp"] is not None
+
+
+def test_published_names_equal_decade_rule(spark, tiny_dir):
+    """Every catalogued type and every type a registered check owns is
+    published under the name the decade rule (exact entry, else the
+    entry of error_type - error_type % 10) gives it."""
+    from keepright_spark.checks import available_checks, owned_types
+    from keepright_spark.data_tables import ERROR_NAMES
+
+    types = set(ERROR_NAMES)
+    for cid in available_checks():
+        lo, hi = owned_types(cid)
+        types.update(range(lo, hi + 1))
+    errs = spark.createDataFrame(
+        [(t, "A1", t, "node", t, 0, 0, "new", 1, 1, "m", None, None, None, None, None)
+         for t in sorted(types)],
+        lifecycle.ERRORS_SCHEMA,
+    )
+    v = pipeline.tiled_views(spark, tiny_dir, share_partitioning=False)
+    got = {
+        r["error_type"]: r["error_name"]
+        for r in lifecycle.published_view(errs, v).collect()
+    }
+    want = {t: ERROR_NAMES.get(t) or ERROR_NAMES.get(t - t % 10, "") for t in types}
+    assert got == want
 
 
 def test_explicit_run_seq_rejects_stale_record(spark, tiny_dir, tmp_path):

@@ -165,3 +165,25 @@ def test_materialization_only_through_lib():
         if call.search(line)
     ]
     assert set(found) <= allowed and len(found) == len(allowed), found
+
+
+def test_file_replace_only_through_lib():
+    """Every state file the engine commits by rename (the engine stamp,
+    the docs-store manifest, the run manifest) goes through
+    lib.write_json."""
+    import inspect
+    import pathlib
+
+    import keepright_spark
+    from keepright_spark import lib
+
+    root = pathlib.Path(keepright_spark.__file__).parent
+    found = [
+        (str(p.relative_to(root)), n)
+        for p in sorted(root.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "os.replace(" in line
+    ]
+    lines, start = inspect.getsourcelines(lib.write_json)
+    inside = range(start, start + len(lines))
+    assert len(found) == 1 and found[0][0] == "lib.py" and found[0][1] in inside, found
