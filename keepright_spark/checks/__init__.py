@@ -92,7 +92,3 @@ def owned_types(cid: int) -> tuple[int, int]:
     mod = import_module(f".{mod_name}", __package__) if mod_name else None
     return getattr(mod, "OWNS", (cid, cid + 9))
 
-
-def get_check(cid: int) -> Callable[[OsmViews], DataFrame]:
-    mod = import_module(f".{_CHECK_MODULES[cid]}", __package__)
-    return mod.run

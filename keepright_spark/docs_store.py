@@ -143,14 +143,13 @@ def _move_staged_buckets(
     return buckets
 
 
-def migrate(
-    spark: SparkSession, dataset_dir: str, n_buckets: int = DEFAULT_BUCKETS
-) -> dict:
+def migrate(spark: SparkSession, dataset_dir: str) -> dict:
     """One-time conversion of a plain ``docs.parquet`` (generator or
-    XML-ingest output) into the bucketed store.  O(|docs|) exactly
-    once — every later upsert is bucket-scoped.  The plain file is
-    removed after the manifest commits (the manifest is the authority;
-    a crash in between leaves both, and readers prefer the store)."""
+    XML-ingest output) into the bucketed store of ``DEFAULT_BUCKETS``
+    buckets.  O(|docs|) exactly once — every later upsert is
+    bucket-scoped.  The plain file is removed after the manifest
+    commits (the manifest is the authority; a crash in between leaves
+    both, and readers prefer the store)."""
     docs_path = os.path.join(dataset_dir, "docs.parquet")
 
     def _drop_plain() -> None:
@@ -176,6 +175,7 @@ def migrate(
 
     stage = os.path.join(root, "stage_v1")
     shutil.rmtree(stage, ignore_errors=True)
+    n_buckets = DEFAULT_BUCKETS
     (
         docs.withColumn("bucket", bucket_expr(n_buckets))
         .repartition(n_buckets, "bucket")
@@ -200,7 +200,6 @@ def upsert(
     spark: SparkSession,
     dataset_dir: str,
     batch: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> list[int]:
     """Merge one replication batch; returns the touched bucket list.
 
@@ -211,7 +210,7 @@ def upsert(
     like the reference's osmosis change file): they give the touched
     buckets, the partition work-list, and the version's changelog,
     which commits with the buckets."""
-    man = migrate(spark, dataset_dir, n_buckets)
+    man = migrate(spark, dataset_dir)
     n = man["n_buckets"]
     root = store_root(dataset_dir)
     _sweep_orphans(root, man)

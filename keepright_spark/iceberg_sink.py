@@ -29,7 +29,7 @@ pointer swap; Iceberg's own metadata keeps the version history that
 Key equality uses ``<=>`` (null-safe), mirroring the reference's
 ``IS NOT DISTINCT FROM`` (run-checks.php:250) and sync_errors'
 ``eqNullSafe``.  New ids are assigned on the fresh side *before* the
-MERGE with the same tile-prefix-sum rule as sync_errors, so both
+MERGE by sync_errors' own rule (lifecycle.assign_fresh_ids), so both
 sinks produce identical tables row for row.
 
 This module is flag-gated: the sandbox image carries no Iceberg
@@ -46,14 +46,14 @@ same key the parquet sink joins on.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import re
 
 from .checks import owned_types
 from .errors import TXT_COLS
-from .lifecycle import KEY
+from .lifecycle import KEY, assign_fresh_ids
 
 # dotted identifier chain (catalog.db.table / temp view name); anything
 # else is rejected rather than interpolated into SQL
@@ -70,40 +70,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-def assign_fresh_ids(fresh: DataFrame, max_id: int) -> DataFrame:
-    """Deterministic error_id assignment for to-be-inserted rows —
-    the same tile-local row_number + tile-count prefix-sum rule as
-    lifecycle.sync_errors, so the MERGE sink's ids match the parquet
-    sink's bit for bit."""
-    w_tile = Window.partitionBy("tile").orderBy(
-        *[F.col(k).asc_nulls_first() for k in KEY if k != "tile"]
-    )
-    tile_off = (
-        fresh.groupBy("tile")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("tile").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("tile", "_off")
-    )
-    return (
-        fresh.withColumn("_rn", F.row_number().over(w_tile))
-        .join(F.broadcast(tile_off), "tile")
-        .withColumn(
-            "error_id", (F.lit(max_id) + F.col("_off") + F.col("_rn")).cast("long")
-        )
-        .drop("_rn", "_off")
-    )
 
 
 def merge_sql(

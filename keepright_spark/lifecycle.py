@@ -27,20 +27,24 @@ rename-swap of error_view_shadow (web/updateTables.php:18-27)::
 
     run_manifest.json             last_run_seq + run_<seq> records
                                   (groups, groups_done, scope,
-                                  docs_sig, committed)
+                                  docs_sig, tile_digest, committed)
     errors_v<seq>.parquet         the errors table run <seq> wrote
     error_statistics/run_<seq>.parquet
     node_density.parquet
     lineage/run_<seq>_group_<g>.json
     stage/run_<seq>/              staged group rows (uncommitted run)
 
-A run writes its table, statistics and census first and commits by
-setting ``run_<seq>.committed`` and ``last_run_seq`` in one manifest
-replace.  Nothing is read through ``last_run_seq`` before that, so a
-crash anywhere leaves the previous run readable, and a resumed run
-rewrites only its own outputs.  The manifest keeps the committed
-run's record and any uncommitted ones; lineage and error_statistics
-keep the history.
+A run record's ``tile_digest`` is the per-tile view digest of the
+world the run read (the engine stamp's, pipeline._tile_digest); the
+next replication cycle scopes itself by comparing it with the current
+stamp's (diff.affected_tiles), so the state dir keeps no change record
+of its own.  A run writes its table, statistics and census first and
+commits by setting ``run_<seq>.committed`` and ``last_run_seq`` in one
+manifest replace.  Nothing is read through ``last_run_seq`` before
+that, so a crash anywhere leaves the previous run readable, and a
+resumed run rewrites only its own outputs.  The manifest keeps the
+committed run's record and any uncommitted ones; lineage and
+error_statistics keep the history.
 """
 
 from __future__ import annotations
@@ -142,13 +146,7 @@ def sync_errors(
         *[existing[c] for c in TXT_COLS],
     )
     max_id = existing.agg(F.coalesce(F.max("error_id"), F.lit(0))).first()[0]
-    # Distributed deterministic id assignment: ids follow the total
-    # order of KEY (which starts with tile), so a per-tile row_number
-    # plus an exclusive prefix-sum of per-tile counts reproduces the
-    # global sequence without funnelling every row through one task.
-    # The prefix-sum window runs over the tiny tile-count frame
-    # (~#tiles rows), not the error rows.
-    # consumed by tile_off AND only_new
+    # consumed by assign_fresh_ids' tile counts AND its row numbering
     fresh_new = materialize(
         j.filter(~old_side & fresh_side).select(
             *[f[k].alias(k) for k in KEY],
@@ -156,32 +154,8 @@ def sync_errors(
             *[f[f"f_{c}"].alias(c) for c in TXT_COLS],
         )
     )
-    w_tile = Window.partitionBy("tile").orderBy(
-        *[F.col(k).asc_nulls_first() for k in KEY if k != "tile"]
-    )
-    tile_off = (
-        fresh_new.groupBy("tile")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("tile").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("tile", "_off")
-    )
     only_new = (
-        fresh_new.withColumn("_rn", F.row_number().over(w_tile))
-        .join(F.broadcast(tile_off), "tile")
-        .withColumn(
-            "error_id", (F.lit(max_id) + F.col("_off") + F.col("_rn")).cast("long")
-        )
-        .drop("_rn", "_off")
+        assign_fresh_ids(fresh_new, max_id)
         .withColumn(
             "state",
             F.when(
@@ -196,6 +170,45 @@ def sync_errors(
         both.select(cols)
         .unionByName(only_old.select(cols))
         .unionByName(only_new.select(cols))
+    )
+
+
+def assign_fresh_ids(fresh: DataFrame, max_id: int) -> DataFrame:
+    """``fresh`` with ``error_id`` = ``max_id`` + its rank in the total
+    order of KEY — the id rule of both sinks (sync_errors here,
+    iceberg_sink.merge_sync_errors on a cluster).
+
+    Distributed: KEY starts with tile, so a per-tile row_number plus an
+    exclusive prefix-sum of per-tile counts reproduces the global
+    sequence without funnelling every row through one task.  The
+    prefix-sum window runs over the tiny tile-count frame (~#tiles
+    rows), not the error rows."""
+    w_tile = Window.partitionBy("tile").orderBy(
+        *[F.col(k).asc_nulls_first() for k in KEY if k != "tile"]
+    )
+    tile_off = (
+        fresh.groupBy("tile")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .withColumn(
+            "_off",
+            F.coalesce(
+                F.sum("_n").over(
+                    Window.orderBy("tile").rowsBetween(
+                        Window.unboundedPreceding, -1
+                    )
+                ),
+                F.lit(0),
+            ),
+        )
+        .select("tile", "_off")
+    )
+    return (
+        fresh.withColumn("_rn", F.row_number().over(w_tile))
+        .join(F.broadcast(tile_off), "tile")
+        .withColumn(
+            "error_id", (F.lit(max_id) + F.col("_off") + F.col("_rn")).cast("long")
+        )
+        .drop("_rn", "_off")
     )
 
 
@@ -403,6 +416,9 @@ def run_persistent(
             "groups": [[t.name for t in g] for g in groups],
             "scope": scope_names,
             "docs_sig": docs_sig,
+            # the world this run reads, for the next cycle's scope
+            # (diff.affected_tiles)
+            "tile_digest": pipeline.tile_digest(dataset_dir),
         }
         write_json(manifest_path, manifest)
     done = set(rec.get("groups_done", []))

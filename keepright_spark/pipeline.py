@@ -32,7 +32,7 @@ import time
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
-from functools import partial
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,13 +97,16 @@ def prepare(spark: SparkSession, dataset_dir: str) -> str:
     The stamp (``engine_manifest.json``) records the generator and
     engine versions, the docs signature, the docs-store version the
     tables reflect, how they were last brought up to date (``refresh``:
-    ``"full"`` or ``"delta"``), each table's Spark schema and the cell
-    census.  A stamp that matches the docs returns at once.  A stamp
-    behind the store whose every later changelog is kept refreshes
-    only the rows those batches reach (``_refresh``).  Anything else —
-    the first build, a plain ``docs.parquet``, a lost changelog, a
-    batch the refresh cannot prove tile-stable, a crash mid-refresh —
-    re-derives every table from all docs (``_build``)."""
+    ``"full"`` or ``"delta"``), each table's Spark schema, the cell
+    census and the per-tile digest of the 8 views (``_tile_digest``).
+    A stamp that matches the docs returns at once.  A stamp behind the
+    store whose every later changelog is kept refreshes only the rows
+    those batches reach (``_refresh``) and re-digests only the tiles it
+    rewrote; a tile the refresh left empty loses its entry.  Anything
+    else — the first build, a plain ``docs.parquet``, a lost changelog,
+    a batch the refresh cannot prove tile-stable, a crash mid-refresh —
+    re-derives every table from all docs (``_build``) and digests every
+    tile."""
     from . import docs_store
 
     out = os.path.join(dataset_dir, "engine")
@@ -116,10 +119,19 @@ def prepare(spark: SparkSession, dataset_dir: str) -> str:
     if st is not None and man is not None and st.get("store_version") is not None:
         changed = docs_store.changes_since(dataset_dir, st["store_version"])
     docs = load_docs(spark, dataset_dir)
-    if changed is not None and _refresh(spark, dataset_dir, out, st, changed, docs):
+    rewritten = None
+    if changed is not None:
+        rewritten = _refresh(spark, dataset_dir, out, st, changed, docs)
+    if rewritten is not None:
         refresh, schemas = "delta", st["schemas"]
+        digest = {t: d for t, d in st["tile_digest"].items() if t not in rewritten}
     else:
         refresh, schemas = "full", _build(spark, dataset_dir, out, docs)
+        digest = {}
+    cell_stats, fresh = _concurrently(
+        partial(_cell_census, spark, out, schemas),
+        partial(_tile_digest, spark, out, schemas, rewritten),
+    )
     write_json(
         os.path.join(out, STAMP),
         {
@@ -129,10 +141,17 @@ def prepare(spark: SparkSession, dataset_dir: str) -> str:
             "store_version": man["version"] if man is not None else None,
             "refresh": refresh,
             "schemas": schemas,
-            "cell_stats": _cell_census(spark, out, schemas),
+            "cell_stats": cell_stats,
+            "tile_digest": dict(sorted({**digest, **fresh}.items())),
         },
     )
     return out
+
+
+def tile_digest(dataset_dir: str) -> dict:
+    """The per-tile view digest the engine stamp of a prepared dataset
+    records (``_tile_digest``)."""
+    return _read_stamp(os.path.join(dataset_dir, "engine"))["tile_digest"]
 
 
 def _read_stamp(out: str) -> dict | None:
@@ -221,13 +240,13 @@ def _refresh(
     st: dict,
     changed: list[str],
     docs: DataFrame,
-) -> bool:
+) -> list[str] | None:
     """Batch-scoped prepare: rewrite only the rows the changed docs
-    reach, in only the tile partitions that hold them.  Returns False,
-    having written nothing, when the batch is not provably tile-stable;
-    the checks run cheapest first, so a batch with a relation or an id
-    decode cannot key on costs no Spark job and an added doc three
-    small ones.
+    reach, in only the tile partitions that hold them, and return those
+    tiles.  Returns None, having written nothing, when the batch is not
+    provably tile-stable; the checks run cheapest first, so a batch
+    with a relation or an id decode cannot key on costs no Spark job
+    and an added doc three small ones.
 
     The batch C (``changed``) bounds every scan of the old tables — a
     data-induced predicate (*Pushing Data-Induced Predicates Through
@@ -262,7 +281,7 @@ def _refresh(
     for doc_id in changed:
         m = _REFRESH_DOC_ID.fullmatch(doc_id)
         if m is None:
-            return False  # a relation, or an id the refresh cannot key on
+            return None  # a relation, or an id the refresh cannot key on
         ids[m[1]].append(int(m[2]))
     n_c, w_c = ids["node"], ids["way"]
     schemas = st["schemas"]
@@ -298,7 +317,7 @@ def _refresh(
         refs[r.way_id, r.tile].append((r.sequence_id, r.node_id))
     old_refs = {w: sorted(refs[w, min(ts)]) for w, ts in way_tiles.items()}
     if set(n_c) - node_tiles.keys() or set(w_c) - way_tiles.keys():
-        return False  # a doc the tables do not hold: added, or in no tile
+        return None  # a doc the tables do not hold: added, or in no tile
     referenced = {n for rs in old_refs.values() for _, n in rs}
     referenced |= {r.member_id for r in old_members}
     ways = sorted(way_tiles)  # W
@@ -323,13 +342,13 @@ def _refresh(
         for n in n_c:
             if n not in new_pos:
                 if n in referenced:
-                    return False  # tombstone of a node still in use
+                    return None  # tombstone of a node still in use
             elif padded_tiles(*new_pos[n], tiles, DEFAULT_MARGIN_M) != padded_tiles(
                 *node_pos[n], tiles, DEFAULT_MARGIN_M
             ):
-                return False
+                return None
         if any(sorted(new_refs[w]) != old_refs[w] for w in w_c):
-            return False
+            return None
 
         # (table, id column, ids to replace, partitions, make rows)
         rewrites = []
@@ -387,7 +406,7 @@ def _refresh(
         # swapped-out files; a Spark overwrite does this on its own
         spark.catalog.refreshByPath(f"{out}/{name}.parquet")
     shutil.rmtree(stage, ignore_errors=True)
-    return True
+    return sorted({t for _, _, _, parts, _ in rewrites for t in parts})
 
 
 def _concurrently(*calls) -> list:
@@ -475,6 +494,37 @@ def _cell_census(spark: SparkSession, out: str, schemas: dict) -> dict:
     return {"max_node_cell64": int(node_max), "max_seg_cell64": int(seg_max)}
 
 
+def _tile_digest(
+    spark: SparkSession, out: str, schemas: dict, tiles: list[str] | None
+) -> dict:
+    """Per-tile content digest of the 8 views, ``{tile: [rows,
+    bit_xor(xxhash64(table, row)), sum(hash(table, row))]}``, over
+    ``tiles`` (every tile when None).  A check sees only its tile's
+    rows of the views and of the helpers derived from them per tile, so
+    a tile whose digest is unchanged keeps its errors: a partition
+    summary that scopes each replication cycle (diff.affected_tiles),
+    as in *Pushing Data-Induced Predicates Through Joins in Big-Data
+    Clusters* (VLDB 2019).  Both hash aggregates are order-independent,
+    and the 32-bit hashes sum into a bigint that cannot overflow below
+    2^32 rows per tile."""
+    parts = []
+    for name in VIEW_NAMES:
+        df = _read_table(spark, out, name, schemas)
+        if tiles is not None:
+            df = df.filter(F.col("tile").isin(tiles))
+        row = [F.lit(name), *(F.col(c) for c in df.columns if c != "tile")]
+        parts.append(
+            df.select("tile", F.xxhash64(*row).alias("h64"), F.hash(*row).alias("h32"))
+        )
+    rows = (
+        reduce(DataFrame.unionByName, parts)
+        .groupBy("tile")
+        .agg(F.count(F.lit(1)), F.bit_xor("h64"), F.sum("h32"))
+        .collect()
+    )
+    return {t: [n, x, h] for t, n, x, h in rows}
+
+
 def _docs_signature(dataset_dir: str) -> str:
     """Cheap driver-side change signature of the docs table (file
     names + sizes + mtimes) — a replication diff lands as new parquet
@@ -511,7 +561,7 @@ def _docs_signature(dataset_dir: str) -> str:
 # oneways / lengths / segments reads the parquet instead of re-running
 # the shared aggregation (saves ~4 stages per consuming check job)
 HELPER_NAMES = ["h_layers", "h_oneways", "h_lengths", "h_segments"]
-ENGINE_VERSION = 7  # 7: store version + table schemas in the stamp
+ENGINE_VERSION = 8  # 8: per-tile view digest in the stamp
 
 
 def _helper_frames(v: OsmViews) -> dict:

@@ -26,14 +26,19 @@ def _clone_dataset(src: str, dst: str) -> None:
     )
 
 
-def _edit_one_doc(spark, ds: str, wid: int, tmp: str) -> None:
-    """Append a fixme tag span to way/<wid> (span invariant intact:
-    new span goes at the end with the next dense offset)."""
+def _edit_one_doc(
+    spark, ds: str, wid: int, tmp: str,
+    kind: str = "tag", text: str = "fixme\tcontinue here",
+    media_ref: str | None = None,
+) -> None:
+    """Append a span to way/<wid> (a fixme tag by default; span
+    invariant intact: new span goes at the end with the next dense
+    offset)."""
     docs = spark.read.parquet(os.path.join(ds, "docs.parquet"))
     new_span = F.struct(
-        F.lit("tag").alias("kind"),
-        F.lit("fixme\tcontinue here").alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
+        F.lit(kind).alias("kind"),
+        F.lit(text).alias("text"),
+        F.lit(media_ref).cast("string").alias("media_ref"),
         F.size("spans").cast("int").alias("offset"),
     )
     edited = docs.withColumn(
@@ -115,6 +120,23 @@ def test_diff_update_scoped_and_state_identical(spark, tiny_dir, tmp_path):
     assert diff.affected_tiles(spark, ds, state) == []
     e3 = diff.diff_update(spark, ds, state, check_ids=CHECKS)
     assert e3.count() == e2.count()
+
+    # a media span on the same doc reaches no view row (decode reads
+    # only meta/coord/tag/noderef/member spans): no tile digest changes,
+    # so the scope is empty, and comparing digests runs no Spark job
+    _edit_one_doc(
+        spark, ds, wid, str(tmp_path), kind="media",
+        text="image/png\tphoto of the way", media_ref="media://0123456789abcdef",
+    )
+    pipeline.prepare(spark, ds)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert diff.affected_tiles(spark, ds, state) == []
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    # the run manifest is the one change record: no doc snapshots
+    assert not [n for n in os.listdir(state) if n.startswith("doc_state_")]
+    rec = lifecycle.committed_run(state)
+    assert sorted(rec["tile_digest"]) == ["A1", "A2"]
 
 
 def test_docs_signature_sees_a_rewritten_docs_file(tmp_path):

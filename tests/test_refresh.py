@@ -111,8 +111,9 @@ def _copy(src: str, dst: str, engine: bool = True) -> str:
 
 def _assert_equals_fresh_build(spark, ds: str, tmp: str) -> int:
     """Every engine table equals a full prepare of a fresh copy of the
-    same docs (sorted rows, the tile column included), and so does the
-    cell census.  Returns the Spark jobs that full prepare ran."""
+    same docs (sorted rows, the tile column included), and so do the
+    cell census and the per-tile view digest.  Returns the Spark jobs
+    that full prepare ran."""
     fresh = _copy(ds, os.path.join(tmp, "fresh"), engine=False)
     before = _jobs(spark)
     pipeline.prepare(spark, fresh)
@@ -124,6 +125,8 @@ def _assert_equals_fresh_build(spark, ds: str, tmp: str) -> int:
         # one file per tile: refreshes do not pile up small files
         assert _files_per_tile(ds, name) == _files_per_tile(fresh, name), name
     assert _stamp(ds)["cell_stats"] == _stamp(fresh)["cell_stats"]
+    # a refresh re-digests only the tiles it rewrote
+    assert _stamp(ds)["tile_digest"] == _stamp(fresh)["tile_digest"]
     assert _stamp(ds)["schemas"] == _stamp(fresh)["schemas"]
     return full_jobs
 
