@@ -32,8 +32,9 @@ from pyspark.sql import functions as F
 
 from .codec import OsmViews
 from .tiling import Tile, clip_errors
-from .lib import materialize
+from .lib import fixpoint, materialize
 
+MAX_RELATION_DESCENT = 100  # relation-in-relation rounds (resolve_locations)
 TXT_COLS = ["txt1", "txt2", "txt3", "txt4", "txt5"]
 ERROR_COLS = [
     "tile",
@@ -218,33 +219,28 @@ def resolve_locations(
     rel_member_rel = v.relation_members.filter(F.col("member_type") == "R").select(
         "tile", "relation_id", F.col("member_id").alias("child_id"), "sequence_id"
     )
-    if rel_member_rel.limit(1).count() > 0:
-        rel_loc = materialize(rel_loc)
-        for _ in range(100):
-            nested = (
-                rel_member_rel.join(
-                    rel_loc.select(
-                        "tile", F.col("object_id").alias("child_id"), "lat", "lon"
-                    ),
-                    ["tile", "child_id"],
-                )
-                .withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy("tile", "relation_id").orderBy(
-                            "sequence_id"
-                        )
-                    ),
-                )
-                .filter(F.col("_rn") == 1)
-                .select("tile", F.col("relation_id").alias("object_id"), "lat", "lon")
+
+    def nested(located: DataFrame) -> DataFrame:
+        return (
+            rel_member_rel.join(
+                located.select(
+                    "tile", F.col("object_id").alias("child_id"), "lat", "lon"
+                ),
+                ["tile", "child_id"],
             )
-            frontier = materialize(
-                nested.join(rel_loc, ["tile", "object_id"], "left_anti")
+            .withColumn(
+                "_rn",
+                F.row_number().over(
+                    Window.partitionBy("tile", "relation_id").orderBy("sequence_id")
+                ),
             )
-            if frontier.count() == 0:
-                break
-            rel_loc = materialize(rel_loc.unionByName(frontier))
+            .filter(F.col("_rn") == 1)
+            .select("tile", F.col("relation_id").alias("object_id"), "lat", "lon")
+        )
+
+    rel_loc = fixpoint(
+        rel_loc, rel_member_rel, nested, ["tile", "object_id"], MAX_RELATION_DESCENT
+    )
     parts.append(
         no_ll.filter(F.col("object_type") == "relation").join(
             rel_loc, ["tile", "object_id"], "inner"

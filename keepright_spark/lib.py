@@ -74,6 +74,27 @@ def materialize(df: DataFrame) -> DataFrame:
     return out
 
 
+def fixpoint(
+    seed: DataFrame, probe: DataFrame, step, key: list[str], max_rounds: int
+) -> DataFrame:
+    """Grow ``seed`` by ``step`` until a round adds no new ``key``, for
+    at most ``max_rounds`` rounds — the relation-nesting loop of tile
+    assignment and of relation location.  When ``probe`` is empty (no
+    nesting at all) ``seed`` comes back after one LIMIT-1 probe.  Each
+    round materializes ``step(acc)``'s rows whose key ``acc`` lacks,
+    counts them and unions them in; the deterministic pin is the
+    step's own."""
+    if probe.limit(1).count() == 0:
+        return seed
+    acc = materialize(seed)
+    for _ in range(max_rounds):
+        new = materialize(step(acc).join(acc, key, "left_anti"))
+        if new.count() == 0:
+            break
+        acc = materialize(acc.unionByName(new))
+    return acc
+
+
 def write_json(path: str, obj) -> None:
     """Replace the JSON document at ``path`` in one step: it is written
     to ``path.tmp`` and renamed over ``path``, so a reader or a crash
@@ -136,12 +157,6 @@ def quoted_tag_list(tags: DataFrame) -> DataFrame:
             ),
         ).alias("taglist")
     )
-
-
-QUOTED_TAG_LIST_SQL = (
-    "string_agg('\"' || COALESCE(k,'') || '=' || COALESCE(v,'') || '\"', "
-    "', ' ORDER BY k, v)"
-)
 
 
 def way_layers(v: OsmViews) -> DataFrame:

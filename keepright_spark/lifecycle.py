@@ -27,24 +27,25 @@ rename-swap of error_view_shadow (web/updateTables.php:18-27)::
 
     run_manifest.json             last_run_seq + run_<seq> records
                                   (groups, groups_done, scope,
-                                  docs_sig, tile_digest, committed)
+                                  tile_summary, committed)
     errors_v<seq>.parquet         the errors table run <seq> wrote
     error_statistics/run_<seq>.parquet
     node_density.parquet
     lineage/run_<seq>_group_<g>.json
     stage/run_<seq>/              staged group rows (uncommitted run)
 
-A run record's ``tile_digest`` is the per-tile view digest of the
-world the run read (the engine stamp's, pipeline._tile_digest); the
-next replication cycle scopes itself by comparing it with the current
-stamp's (diff.affected_tiles), so the state dir keeps no change record
-of its own.  A run writes its table, statistics and census first and
-commits by setting ``run_<seq>.committed`` and ``last_run_seq`` in one
-manifest replace.  Nothing is read through ``last_run_seq`` before
-that, so a crash anywhere leaves the previous run readable, and a
-resumed run rewrites only its own outputs.  The manifest keeps the
-committed run's record and any uncommitted ones; lineage and
-error_statistics keep the history.
+A run record's ``tile_summary`` is the per-tile summary of the world
+the run read (the engine stamp's, pipeline._summarize): a staged run
+resumes only while its scope and summary equal the current ones, and
+the next replication cycle scopes itself by comparing it with the
+current stamp's (diff.affected_tiles), so the state dir keeps no
+change record of its own.  A run writes its table, statistics and
+census first and commits by setting ``run_<seq>.committed`` and
+``last_run_seq`` in one manifest replace.  Nothing is read through
+``last_run_seq`` before that, so a crash anywhere leaves the previous
+run readable, and a resumed run rewrites only its own outputs.  The
+manifest keeps the committed run's record and any uncommitted ones;
+lineage and error_statistics keep the committed runs' history.
 """
 
 from __future__ import annotations
@@ -64,6 +65,7 @@ from .errors import TXT_COLS
 from .lib import materialization_scope, materialize, write_json
 
 MANIFEST = "run_manifest.json"
+TILE_GROUP_SIZE = 64  # tiles per staged, resumable group
 
 KEY = ["tile", "error_type", "object_type", "object_id", "lat", "lon"]
 
@@ -302,13 +304,13 @@ def current_errors_path(state_dir: str) -> str | None:
     return os.path.join(state_dir, f"errors_v{seq}.parquet") if seq else None
 
 
-def _same_world(rec: dict, scope: list[str], docs_sig: str) -> bool:
+def _same_world(rec: dict, scope: list[str], summary: dict) -> bool:
     """Run identity: a staged run may be resumed only over exactly the
-    tiles and the docs snapshot it was staged for — else its groups
+    tiles and the table summary it was staged for — else its groups
     describe a different world than the sync would commit against
     (newly affected tiles would be silently skipped yet fall inside
     the clear scope → false 'cleared' rows)."""
-    return rec.get("scope") == scope and rec.get("docs_sig") == docs_sig
+    return rec.get("scope") == scope and rec.get("tile_summary") == summary
 
 
 def _drop_run(state_dir: str, seq: int) -> None:
@@ -319,6 +321,10 @@ def _drop_run(state_dir: str, seq: int) -> None:
         os.path.join(state_dir, "error_statistics", f"run_{seq}.parquet"),
     ):
         shutil.rmtree(p, ignore_errors=True)
+    lineage = os.path.join(state_dir, "lineage")
+    for name in os.listdir(lineage) if os.path.isdir(lineage) else []:
+        if name.startswith(f"run_{seq}_group_"):
+            os.remove(os.path.join(lineage, name))
 
 
 def run_persistent(
@@ -326,8 +332,6 @@ def run_persistent(
     dataset_dir: str,
     state_dir: str,
     check_ids: list[int] | None = None,
-    run_seq: int | None = None,
-    tile_group_size: int = 64,
     only_tiles: list[str] | None = None,
 ) -> DataFrame:
     """Full resumable run: staged per-tile-group check execution with
@@ -354,71 +358,59 @@ def run_persistent(
                 return spark.read.parquet(cur)
             return spark.createDataFrame([], ERRORS_SCHEMA)
     scope_names = sorted(t.name for t in tiles)
-    docs_sig = pipeline._docs_signature(dataset_dir)
-    if run_seq is None:
-        # crash-safe resume: pick up the newest uncommitted run of the
-        # same world (its groups_done lets us skip completed groups);
-        # every other uncommitted run is stale and swept with all it
-        # wrote, so crashed runs can't accumulate orphaned output
-        seqs = sorted(
-            int(k[4:]) for k in manifest if k.startswith("run_") and k[4:].isdigit()
-        )
-        uncommitted = [s for s in seqs if not manifest[f"run_{s}"].get("committed")]
-        same = [
-            s for s in uncommitted
-            if _same_world(manifest[f"run_{s}"], scope_names, docs_sig)
-        ]
-        run_seq = same[-1] if same else None
-        stale = [s for s in uncommitted if s != run_seq]
-        for s in stale:
-            _drop_run(state_dir, s)
-            del manifest[f"run_{s}"]
-        if stale:
-            write_json(manifest_path, manifest)
-        if run_seq is None:
-            run_seq = max(int(manifest.get("last_run_seq", 0)), *uncommitted, 0) + 1
     # no shared cache here: each tile group filters the views to its
     # tiles, and over the raw tile-partitioned parquet that filter is
     # partition pruning — the group's scan touches only its partitions
     v = pipeline.tiled_views(spark, dataset_dir, share_partitioning=False)
+    summary = pipeline.tile_summary(dataset_dir)
     # refuse to run over an empty base table (run-checks.php:66-84) —
     # a vanished input would otherwise "clear" every error in scope
     from .watchdog import assert_base_tables
 
-    assert_base_tables(v)
+    assert_base_tables(summary)
+
+    # crash-safe resume: pick up the newest uncommitted run of the same
+    # world (its groups_done lets us skip completed groups); every other
+    # uncommitted run is stale and swept with all it wrote, so crashed
+    # runs can't accumulate orphaned output
+    seqs = sorted(
+        int(k[4:]) for k in manifest if k.startswith("run_") and k[4:].isdigit()
+    )
+    uncommitted = [s for s in seqs if not manifest[f"run_{s}"].get("committed")]
+    same = [
+        s for s in uncommitted
+        if _same_world(manifest[f"run_{s}"], scope_names, summary)
+    ]
+    if same:
+        run_seq = same[-1]
+    else:
+        run_seq = max(int(manifest.get("last_run_seq", 0)), *uncommitted, 0) + 1
+    stale = [s for s in uncommitted if s != run_seq]
+    for s in stale:
+        _drop_run(state_dir, s)
+        del manifest[f"run_{s}"]
+    if stale:
+        write_json(manifest_path, manifest)
 
     # The tile-group layout is part of the run's durable state: a
-    # resumed process must read the staged outputs under the SAME
-    # grouping it crashed with, not one re-derived from its own
-    # tile_group_size argument.
+    # resumed process reads the staged outputs under the grouping it
+    # crashed with, not one re-derived from TILE_GROUP_SIZE.
     run_key = f"run_{run_seq}"
     rec = manifest.get(run_key)
-    tile_by_name = {t.name: t for t in tiles}
     if rec is not None:
-        # run identity holds for ANY reused record — including an
-        # explicitly passed run_seq: raise instead of silently
-        # filtering a stale record's groups
-        if rec.get("committed") or not _same_world(rec, scope_names, docs_sig):
-            raise ValueError(
-                f"{run_key} was committed or staged for a different world "
-                f"(stored: {len(rec.get('scope', []))} tiles, docs_sig="
-                f"{rec.get('docs_sig')!r}; current: {len(scope_names)} "
-                f"tiles, docs_sig={docs_sig!r}). Pass a fresh run_seq "
-                f"or delete the stale staged run."
-            )
+        tile_by_name = {t.name: t for t in tiles}
         groups = [[tile_by_name[n] for n in g] for g in rec["groups"]]
     else:
         groups = [
-            tiles[i : i + tile_group_size]
-            for i in range(0, len(tiles), tile_group_size)
+            tiles[i : i + TILE_GROUP_SIZE]
+            for i in range(0, len(tiles), TILE_GROUP_SIZE)
         ]
         rec = manifest[run_key] = {
             "groups": [[t.name for t in g] for g in groups],
             "scope": scope_names,
-            "docs_sig": docs_sig,
             # the world this run reads, for the next cycle's scope
             # (diff.affected_tiles)
-            "tile_digest": pipeline.tile_digest(dataset_dir),
+            "tile_summary": summary,
         }
         write_json(manifest_path, manifest)
     done = set(rec.get("groups_done", []))

@@ -97,16 +97,16 @@ def prepare(spark: SparkSession, dataset_dir: str) -> str:
     The stamp (``engine_manifest.json``) records the generator and
     engine versions, the docs signature, the docs-store version the
     tables reflect, how they were last brought up to date (``refresh``:
-    ``"full"`` or ``"delta"``), each table's Spark schema, the cell
-    census and the per-tile digest of the 8 views (``_tile_digest``).
-    A stamp that matches the docs returns at once.  A stamp behind the
-    store whose every later changelog is kept refreshes only the rows
-    those batches reach (``_refresh``) and re-digests only the tiles it
-    rewrote; a tile the refresh left empty loses its entry.  Anything
-    else — the first build, a plain ``docs.parquet``, a lost changelog,
-    a batch the refresh cannot prove tile-stable, a crash mid-refresh —
-    re-derives every table from all docs (``_build``) and digests every
-    tile."""
+    ``"full"`` or ``"delta"``), each table's Spark schema and the
+    per-tile summary of the tables (``_summarize``).  A stamp that
+    matches the docs returns at once.  A stamp behind the store whose
+    every later changelog is kept refreshes only the rows those batches
+    reach (``_refresh``) and re-summarizes only the tiles it rewrote; a
+    tile the refresh left empty loses its entry.  Anything else — the
+    first build, a plain ``docs.parquet``, a lost changelog, a batch
+    the refresh cannot prove tile-stable, a crash mid-refresh —
+    re-derives every table from all docs (``_build``) and summarizes
+    every tile."""
     from . import docs_store
 
     out = os.path.join(dataset_dir, "engine")
@@ -124,14 +124,11 @@ def prepare(spark: SparkSession, dataset_dir: str) -> str:
         rewritten = _refresh(spark, dataset_dir, out, st, changed, docs)
     if rewritten is not None:
         refresh, schemas = "delta", st["schemas"]
-        digest = {t: d for t, d in st["tile_digest"].items() if t not in rewritten}
+        summary = {t: e for t, e in st["tile_summary"].items() if t not in rewritten}
     else:
         refresh, schemas = "full", _build(spark, dataset_dir, out, docs)
-        digest = {}
-    cell_stats, fresh = _concurrently(
-        partial(_cell_census, spark, out, schemas),
-        partial(_tile_digest, spark, out, schemas, rewritten),
-    )
+        summary = {}
+    summary.update(_summarize(spark, out, schemas, rewritten))
     write_json(
         os.path.join(out, STAMP),
         {
@@ -141,17 +138,16 @@ def prepare(spark: SparkSession, dataset_dir: str) -> str:
             "store_version": man["version"] if man is not None else None,
             "refresh": refresh,
             "schemas": schemas,
-            "cell_stats": cell_stats,
-            "tile_digest": dict(sorted({**digest, **fresh}.items())),
+            "tile_summary": dict(sorted(summary.items())),
         },
     )
     return out
 
 
-def tile_digest(dataset_dir: str) -> dict:
-    """The per-tile view digest the engine stamp of a prepared dataset
-    records (``_tile_digest``)."""
-    return _read_stamp(os.path.join(dataset_dir, "engine"))["tile_digest"]
+def tile_summary(dataset_dir: str) -> dict:
+    """The per-tile summary the engine stamp of a prepared dataset
+    records (``_summarize``)."""
+    return _read_stamp(os.path.join(dataset_dir, "engine"))["tile_summary"]
 
 
 def _read_stamp(out: str) -> dict | None:
@@ -444,85 +440,85 @@ def _swap_partition(out: str, stage: str, name: str, part: str) -> None:
         os.rename(new, cur)
 
 
-def _cell_census(spark: SparkSession, out: str, schemas: dict) -> dict:
-    """Hottest-64 m-cell occupancy of nodes and way segments — the
-    prepare-time skew statistic spatial.spread() gates its balancing
-    exchange on (the cluster analog is Iceberg table stats, refreshed
-    with the table).
+def _summarize(
+    spark: SparkSession, out: str, schemas: dict, tiles: list[str] | None
+) -> dict:
+    """Per-tile summary of the engine tables over ``tiles`` (every tile
+    when None) in one aggregation pass: ``{tile: {<view>: [rows,
+    bit_xor(xxhash64(view, row)), sum(hash(view, row))]`` for each of
+    the 8 views, ``"max_node_cell64": .., "max_seg_cell64": ..}}``.
 
-    Segment occupancy counts every cell the segment's bbox covers —
-    the same enrollment the consumers use (0050's line_cells /
-    bseg_cells explode bbox_cells) — so the stat is an upper bound for
-    bbox-cell joins too: a cell crossed by many long segments whose
-    midpoints lie elsewhere reads exactly as hot as the join will see
-    it.  Node occupancy stays midpoint(point)-based, matching
-    point_cells consumers.
+    One entry per partition, kept with the tables as an Iceberg manifest
+    keeps its partition summaries (and as in *Pushing Data-Induced
+    Predicates Through Joins in Big-Data Clusters*, VLDB 2019).  On the
+    driver it scopes a cycle (diff.affected_tiles), identifies a staged
+    run (lifecycle.run_persistent), guards against an empty view
+    (watchdog.assert_base_tables) and sizes spread()'s gate
+    (``tiled_views``).  Row counts come from the written tables, so the
+    guard checks what the checks read.  Both hash aggregates are
+    order-independent; the 32-bit hashes sum into a bigint that cannot
+    overflow below 2^32 rows.
 
-    The bbox is padded with the LARGEST pad any 64 m-cell consumer
-    enrolls with (check_0050's RADIUS) so the census stays a true
-    upper bound for padded joins: without the pad, a world whose
-    segments cluster just under the hot limit could read cold here
-    while 0050's padded enrollment pushes the same cells hot."""
+    The cell census is the hottest 64 m cell of nodes (point-based, as
+    point_cells consumers enroll) and of way segments (every cell the
+    bbox covers, padded with the largest consumer pad, check_0050's
+    RADIUS, as line_cells / bseg_cells enroll), so it is an upper bound
+    for padded bbox-cell joins too.  Rows group by (tile, view, cell),
+    the cell null but for these two, then by (tile, view)."""
     from .checks.check_0050 import RADIUS as MAX_CONSUMER_PAD_M
     from .spatial import bbox_cells, point_cells
 
-    nodes = _read_table(spark, out, "nodes", schemas)
-    node_max = (
-        nodes.groupBy("tile", point_cells(F.col("x"), F.col("y"), 64.0).alias("c"))
-        .count()
-        .agg(F.coalesce(F.max("count"), F.lit(0)))
-    )
-    segs = _read_table(spark, out, "h_segments", schemas)
-    seg_max = (
-        segs.select(
-            "tile",
-            F.explode(
-                bbox_cells(
-                    F.least("ax", "bx"), F.least("ay", "by"),
-                    F.greatest("ax", "bx"), F.greatest("ay", "by"),
-                    64.0, MAX_CONSUMER_PAD_M,
-                )
-            ).alias("c"),
-        )
-        .groupBy("tile", "c")
-        .count()
-        .agg(F.coalesce(F.max("count"), F.lit(0)))
-    )
-    (node_max,), (seg_max,) = (
-        rows[0] for rows in _concurrently(node_max.collect, seg_max.collect)
-    )
-    return {"max_node_cell64": int(node_max), "max_seg_cell64": int(seg_max)}
+    def read(name: str) -> DataFrame:
+        df = _read_table(spark, out, name, schemas)
+        return df if tiles is None else df.filter(F.col("tile").isin(tiles))
 
-
-def _tile_digest(
-    spark: SparkSession, out: str, schemas: dict, tiles: list[str] | None
-) -> dict:
-    """Per-tile content digest of the 8 views, ``{tile: [rows,
-    bit_xor(xxhash64(table, row)), sum(hash(table, row))]}``, over
-    ``tiles`` (every tile when None).  A check sees only its tile's
-    rows of the views and of the helpers derived from them per tile, so
-    a tile whose digest is unchanged keeps its errors: a partition
-    summary that scopes each replication cycle (diff.affected_tiles),
-    as in *Pushing Data-Induced Predicates Through Joins in Big-Data
-    Clusters* (VLDB 2019).  Both hash aggregates are order-independent,
-    and the 32-bit hashes sum into a bigint that cannot overflow below
-    2^32 rows per tile."""
     parts = []
     for name in VIEW_NAMES:
-        df = _read_table(spark, out, name, schemas)
-        if tiles is not None:
-            df = df.filter(F.col("tile").isin(tiles))
+        df = read(name)
         row = [F.lit(name), *(F.col(c) for c in df.columns if c != "tile")]
-        parts.append(
-            df.select("tile", F.xxhash64(*row).alias("h64"), F.hash(*row).alias("h32"))
-        )
+        cell = F.lit(None)
+        if name == "nodes":
+            cell = point_cells(F.col("x"), F.col("y"), 64.0)
+        parts.append(df.select(
+            "tile",
+            F.lit(name).alias("part"),
+            cell.cast("long").alias("c"),
+            F.xxhash64(*row).alias("h64"),
+            F.hash(*row).alias("h32"),
+        ))
+    segs = read("h_segments")
+    parts.append(segs.select(
+        "tile",
+        F.lit("h_segments").alias("part"),
+        F.explode(
+            bbox_cells(
+                F.least("ax", "bx"), F.least("ay", "by"),
+                F.greatest("ax", "bx"), F.greatest("ay", "by"),
+                64.0, MAX_CONSUMER_PAD_M,
+            )
+        ).alias("c"),
+        F.lit(None).cast("long").alias("h64"),
+        F.lit(None).cast("int").alias("h32"),
+    ))
     rows = (
         reduce(DataFrame.unionByName, parts)
-        .groupBy("tile")
-        .agg(F.count(F.lit(1)), F.bit_xor("h64"), F.sum("h32"))
+        .groupBy("tile", "part", "c")
+        .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("h64").alias("x"),
+             F.sum("h32").alias("h"))
+        .groupBy("tile", "part")
+        .agg(F.sum("n"), F.max("n"), F.bit_xor("x"), F.sum("h"))
         .collect()
     )
-    return {t: [n, x, h] for t, n, x, h in rows}
+    empty = {**{n: [0, 0, 0] for n in VIEW_NAMES}, **dict.fromkeys(CELL_STATS, 0)}
+    summary: dict[str, dict] = defaultdict(lambda: dict(empty))
+    for t, part, n, top, x, h in rows:
+        if part == "h_segments":
+            summary[t]["max_seg_cell64"] = top
+        else:
+            summary[t][part] = [n, x, h]
+            if part == "nodes":
+                summary[t]["max_node_cell64"] = top
+    return dict(summary)
 
 
 def _docs_signature(dataset_dir: str) -> str:
@@ -561,7 +557,9 @@ def _docs_signature(dataset_dir: str) -> str:
 # oneways / lengths / segments reads the parquet instead of re-running
 # the shared aggregation (saves ~4 stages per consuming check job)
 HELPER_NAMES = ["h_layers", "h_oneways", "h_lengths", "h_segments"]
-ENGINE_VERSION = 8  # 8: per-tile view digest in the stamp
+ENGINE_VERSION = 9  # 9: one per-tile summary in the stamp
+# the skew census of each summary entry (spatial.spread's gate)
+CELL_STATS = ["max_node_cell64", "max_seg_cell64"]
 
 
 def _helper_frames(v: OsmViews) -> dict:
@@ -617,10 +615,15 @@ def tiled_views(
     except (OSError, ValueError):
         pass
     st = _read_stamp(out)
-    # tile count feeds spread()'s lumpy-placement gate (few tiles
-    # hashed into ~as-many partitions → balls-in-bins skew)
+    # the hottest cell over all tiles; the tile count feeds spread()'s
+    # lumpy-placement gate (few tiles hashed into ~as-many partitions →
+    # balls-in-bins skew)
     n_tiles = len(_tiles(dataset_dir))
-    cell_stats = {**st["cell_stats"], "n_tiles": n_tiles}
+    cell_stats = {
+        stat: max((e[stat] for e in st["tile_summary"].values()), default=0)
+        for stat in CELL_STATS
+    }
+    cell_stats["n_tiles"] = n_tiles
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if share_partitioning == "auto":

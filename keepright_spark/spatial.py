@@ -108,17 +108,6 @@ def point_seg_dist2(
     return d2, cx, cy
 
 
-POINT_SEG_DIST2_SQL = """
-    (bx-ax)*(bx-ax) + (by-ay)*(by-ay) AS len2,
-    CASE WHEN len2 = 0 THEN 0.0
-         ELSE GREATEST(0.0, LEAST(1.0, ((px-ax)*(bx-ax)+(py-ay)*(by-ay))/len2))
-    END AS t,
-    ax + t*(bx-ax) AS cx,
-    ay + t*(by-ay) AS cy,
-    (px-cx)*(px-cx) + (py-cy)*(py-cy) AS d2
-"""
-
-
 def seg_cross(ax, ay, bx, by, cx, cy, dx, dy) -> Column:
     """True iff segments AB and CD intersect (incl. touching).
 

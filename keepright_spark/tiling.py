@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .codec import OsmViews
-from .lib import materialize
+from .lib import fixpoint, materialize
 from .mercator import merc_lat, merc_lon, merc_x, merc_y
 
 
@@ -82,6 +82,7 @@ DEFAULT_TILES = [
     Tile("A2", left=16.30, right=16.40, top=48.10, bottom=48.00),
 ]
 DEFAULT_MARGIN_M = 2000.0
+MAX_RELATION_DEPTH = 8  # parent-ward rounds of relation tile assignment
 
 
 def _in_box(lat, lon, left, right, top, bottom):
@@ -117,7 +118,6 @@ def assign_tiles(
     views: OsmViews,
     tiles: list[Tile] | None = None,
     margin_m: float = DEFAULT_MARGIN_M,
-    max_relation_depth: int = 8,
 ) -> OsmViews:
     """Return views with a ``tile`` column, duplicating margin objects.
 
@@ -128,7 +128,8 @@ def assign_tiles(
     * a way belongs to every tile that contains ≥1 of its nodes, and
       pulls all its nodes into that tile (completeWays);
     * relations keep members that exist locally; relations with no
-      local member are dropped, iterating for nested relations.
+      local member are dropped, iterating for nested relations up to
+      MAX_RELATION_DEPTH levels.
 
     The tile table is tiny (≤ ~85 rows) and broadcast; node→tile
     assignment is a broadcast range join, so no all-to-all shuffle.
@@ -200,22 +201,15 @@ def assign_tiles(
     rm_nested = rm.filter(F.col("member_type") == "R").select(
         "relation_id", F.col("member_id")
     )
-    has_nested = rm_nested.limit(1).count() > 0
-    if has_nested:
-        rel_tile = materialize(rel_tile)
-        for _ in range(max_relation_depth):
-            grown = (
-                rm_nested.join(
-                    rel_tile.withColumnRenamed("id", "member_id"), "member_id"
-                )
-                .select(F.col("relation_id").alias("id"), "tile")
-                .distinct()
-                .join(rel_tile, ["id", "tile"], "left_anti")
-            )
-            grown = materialize(grown)
-            if grown.count() == 0:
-                break
-            rel_tile = materialize(rel_tile.unionByName(grown))
+
+    def parents(located: DataFrame) -> DataFrame:
+        return (
+            rm_nested.join(located.withColumnRenamed("id", "member_id"), "member_id")
+            .select(F.col("relation_id").alias("id"), "tile")
+            .distinct()
+        )
+
+    rel_tile = fixpoint(rel_tile, rm_nested, parents, ["id", "tile"], MAX_RELATION_DEPTH)
 
     relations = views.relations.join(rel_tile, "id")
     local_objs = local_n.unionByName(local_w).unionByName(

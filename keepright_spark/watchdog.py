@@ -6,21 +6,23 @@ dataset + state-directory artifacts:
 * base-table population guard — the reference refuses to run checks
   when any base table is empty (``LIMIT 1`` probes,
   checks/run-checks.php:66-84, "one of the base tables is empty");
-  ``assert_base_tables`` is the same probe over the tiled views and is
-  called by ``lifecycle.run_persistent`` before any check executes.
+  ``assert_base_tables`` reads the views' row counts from the engine
+  stamp's per-tile summary instead and is called by
+  ``lifecycle.run_persistent`` before any check executes.
 * input ("planet file") size + age — watchdog.php:39-53 with the
   limits of config/config.php:188-207 (planet_minimum_filesize,
   schema_max_age); here the input is the docs.parquet directory.
 * result freshness + floors — watchdog.php:57-88 checks result files
   exist, are big enough and young enough; here the results are the
   committed errors table and run manifest (read through
-  ``lifecycle``), the lineage rows, and optionally the TSV export
-  directory.  The per-tile-group floor (every group emitted ≥
-  ``min_rows_per_group`` error rows) replaces the
-  error_view_minimum_filesize byte floor.
+  ``lifecycle``), the committed run's lineage rows, and optionally the
+  TSV export directory.  The state's age is that of the committed
+  run's lineage (``run_<last_run_seq>_*``), so a crashed later run's
+  lineage cannot make an old commit look fresh.  The per-tile-group
+  floor (every group emitted ≥ ``min_rows_per_group`` error rows)
+  replaces the error_view_minimum_filesize byte floor.
 
-All filesystem checks are driver-side metadata reads — no Spark jobs
-except the eight LIMIT-1 probes, which are partition-pruned scans.
+Every check is a driver-side metadata read; none runs a Spark job.
 """
 
 from __future__ import annotations
@@ -44,18 +46,19 @@ class WatchdogError(RuntimeError):
     """Raised when ``run_watchdog(strict=True)`` finds issues."""
 
 
-def assert_base_tables(v) -> None:
+def assert_base_tables(summary: dict) -> None:
     """Refuse to run on an empty base table (run-checks.php:66-84).
 
-    LIMIT-1 probes on each of the eight relational views; raises
-    WatchdogError naming the empty view (unlike the reference, which
-    famously "won't tell you which one")."""
+    A view is empty when its row counts in ``summary`` (the engine
+    stamp's per-tile summary, pipeline.tile_summary) sum to 0 over
+    the tiles; raises WatchdogError naming the empty view (unlike the
+    reference, which famously "won't tell you which one")."""
     from .pipeline import VIEW_NAMES
 
     empty = [
         name
         for name in VIEW_NAMES
-        if len(getattr(v, name).limit(1).take(1)) == 0
+        if sum(entry[name][0] for entry in summary.values()) == 0
     ]
     if empty:
         raise WatchdogError(
@@ -152,29 +155,31 @@ def run_watchdog(
         if last and not manifest.get(f"run_{last}", {}).get("committed"):
             issues.append(f"run {last} is not committed")
 
+        # freshness and the per-tile-group result floor over the
+        # committed run's lineage only
         lineage_dir = os.path.join(state_dir, "lineage")
-        if not os.path.isdir(lineage_dir) or not os.listdir(lineage_dir):
-            issues.append(f"no lineage rows under {state_dir}")
-        else:
-            mt = _newest_mtime(lineage_dir)
-            if mt is not None and mt < now - cfg["state_max_age_sec"]:
+        names = os.listdir(lineage_dir) if os.path.isdir(lineage_dir) else []
+        rows = [
+            os.path.join(lineage_dir, fn)
+            for fn in sorted(names)
+            if fn.startswith(f"run_{last}_")
+        ]
+        if not rows:
+            issues.append(f"no lineage rows of run {last} under {state_dir}")
+        elif max(map(os.path.getmtime, rows)) < now - cfg["state_max_age_sec"]:
+            issues.append(
+                "latest committed run is older than "
+                f"{cfg['state_max_age_sec'] // 86400} days"
+            )
+        for p in rows:
+            with open(p) as f:
+                row = json.load(f)
+            if row.get("error_rows", 0) < cfg["min_rows_per_group"]:
                 issues.append(
-                    "latest committed run is older than "
-                    f"{cfg['state_max_age_sec'] // 86400} days"
+                    f"tile group {row.get('group')} of run {last} "
+                    f"emitted {row.get('error_rows', 0)} rows "
+                    f"(< {cfg['min_rows_per_group']})"
                 )
-            # per-tile-group result floor over the last run's lineage
-            if last:
-                for fn in sorted(os.listdir(lineage_dir)):
-                    if not fn.startswith(f"run_{last}_"):
-                        continue
-                    with open(os.path.join(lineage_dir, fn)) as f:
-                        row = json.load(f)
-                    if row.get("error_rows", 0) < cfg["min_rows_per_group"]:
-                        issues.append(
-                            f"tile group {row.get('group')} of run {last} "
-                            f"emitted {row.get('error_rows', 0)} rows "
-                            f"(< {cfg['min_rows_per_group']})"
-                        )
 
     # export dump files (watchdog.php:57-88)
     if export_dir is not None:

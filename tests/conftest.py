@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -12,6 +13,19 @@ os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 from keepright_spark.datagen import ensure_dataset
 from keepright_spark.session import get_spark
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Count Spark jobs: the list the block gets holds, once the block
+    exits, the ids of the jobs started inside it."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    started: list[int] = []
+    try:
+        yield started
+    finally:
+        started += sorted(set(tracker.getJobIdsForGroup(None)) - before)
 
 
 @pytest.fixture(scope="session")

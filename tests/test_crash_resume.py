@@ -40,12 +40,11 @@ def counting_run_checks(*a, **kw):
 
 pipeline.run_checks = counting_run_checks
 lifecycle.pipeline.run_checks = counting_run_checks
+lifecycle.TILE_GROUP_SIZE = 1
 
 spark = get_spark("crash_resume_test", cores=4, shuffle_partitions=4)
 d = ensure_dataset("t")
-df = lifecycle.run_persistent(
-    spark, d, state_dir, check_ids=[20, 120], tile_group_size=1
-)
+df = lifecycle.run_persistent(spark, d, state_dir, check_ids=[20, 120])
 rows = sorted(
     tuple(str(x) for x in r)
     for r in df.select(*sorted(df.columns)).collect()
@@ -72,7 +71,7 @@ def test_kill_between_group_commits(tmp_path):
     clean_state = str(tmp_path / "clean")
     counter = str(tmp_path / "counter.json")
 
-    # scale "t" has 2 tiles -> 2 groups at tile_group_size=1.
+    # scale "t" has 2 tiles -> 2 groups of one tile each.
     # kill at the start of group 2: group 1 is committed, group 2 not.
     p = _run_child(repo, 2, crash_state, counter)
     assert p.returncode == 137, p.stderr[-2000:]

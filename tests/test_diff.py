@@ -7,6 +7,7 @@ import json
 import os
 import shutil
 
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from keepright_spark import diff, lifecycle, pipeline
@@ -122,21 +123,21 @@ def test_diff_update_scoped_and_state_identical(spark, tiny_dir, tmp_path):
     assert e3.count() == e2.count()
 
     # a media span on the same doc reaches no view row (decode reads
-    # only meta/coord/tag/noderef/member spans): no tile digest changes,
-    # so the scope is empty, and comparing digests runs no Spark job
+    # only meta/coord/tag/noderef/member spans): no tile summary
+    # changes, so the scope is empty, and comparing summaries runs no
+    # Spark job
     _edit_one_doc(
         spark, ds, wid, str(tmp_path), kind="media",
         text="image/png\tphoto of the way", media_ref="media://0123456789abcdef",
     )
     pipeline.prepare(spark, ds)
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    assert diff.affected_tiles(spark, ds, state) == []
-    assert set(tracker.getJobIdsForGroup(None)) == before
+    with spark_jobs(spark) as jobs:
+        assert diff.affected_tiles(spark, ds, state) == []
+    assert jobs == []
     # the run manifest is the one change record: no doc snapshots
     assert not [n for n in os.listdir(state) if n.startswith("doc_state_")]
     rec = lifecycle.committed_run(state)
-    assert sorted(rec["tile_digest"]) == ["A1", "A2"]
+    assert sorted(rec["tile_summary"]) == ["A1", "A2"]
 
 
 def test_docs_signature_sees_a_rewritten_docs_file(tmp_path):

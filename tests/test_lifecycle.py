@@ -101,16 +101,15 @@ def test_persistent_run_resume(spark, tiny_dir, tmp_path):
         assert tl[(2, et)] == (n, 0)     # identical re-run, delta 0
 
 
-def test_crash_resume_uncommitted_run(spark, tiny_dir, tmp_path):
+def test_crash_resume_uncommitted_run(spark, tiny_dir, tmp_path, monkeypatch):
     """A restart after a crash mid-run must resume the SAME run_seq,
     reuse its completed tile groups, and finish with a committed
     errors table named by the run manifest."""
     import shutil
 
+    monkeypatch.setattr(lifecycle, "TILE_GROUP_SIZE", 1)
     state = str(tmp_path / "state")
-    e1 = lifecycle.run_persistent(
-        spark, tiny_dir, state, check_ids=[20], tile_group_size=1
-    )
+    e1 = lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[20])
     n1 = e1.count()
     mp = os.path.join(state, "run_manifest.json")
     with open(mp) as f:
@@ -263,28 +262,38 @@ def test_published_names_equal_decade_rule(spark, tiny_dir):
     assert got == want
 
 
-def test_explicit_run_seq_rejects_stale_record(spark, tiny_dir, tmp_path):
-    """Reusing a run record staged for a different world must raise,
-    not silently filter its groups (false-'cleared' hazard)."""
+def test_stale_staged_run_is_swept(spark, tiny_dir, tmp_path, monkeypatch):
+    """An uncommitted run staged for another tile scope is never resumed
+    (its groups describe a different world: false-'cleared' hazard).
+    The next run sweeps its record, staged groups and lineage, and
+    commits under a fresh run_seq."""
+    monkeypatch.setattr(lifecycle, "TILE_GROUP_SIZE", 1)
     state = str(tmp_path / "state")
-    lifecycle.run_persistent(
-        spark, tiny_dir, state, check_ids=[20], tile_group_size=1
-    )
+    lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[20])
     mp = os.path.join(state, "run_manifest.json")
     with open(mp) as f:
         m = json.load(f)
-    # a crashed run staged against a different tile scope
+    # a crashed run staged against a different tile scope, one group done
     m["run_2"] = {
         "groups": [["bogus_tile"]],
+        "groups_done": [0],
         "scope": ["bogus_tile"],
-        "docs_sig": m["run_1"].get("docs_sig", "x"),
+        "tile_summary": m["run_1"]["tile_summary"],
     }
     with open(mp, "w") as f:
         json.dump(m, f)
-    with pytest.raises(ValueError, match="different world"):
-        lifecycle.run_persistent(
-            spark, tiny_dir, state, check_ids=[20], run_seq=2
-        )
+    os.makedirs(os.path.join(state, "stage", "run_2", "ev_0.parquet"))
+    with open(os.path.join(state, "lineage", "run_2_group_0.json"), "w") as f:
+        json.dump({"run_seq": 2, "group": 0, "tiles": ["bogus_tile"]}, f)
+
+    lifecycle.run_persistent(spark, tiny_dir, state, check_ids=[20])
+    m = lifecycle.read_manifest(state)
+    assert [k for k in m if k.startswith("run_")] == ["run_3"]
+    assert m["last_run_seq"] == 3 and m["run_3"]["committed"]
+    assert not os.path.exists(os.path.join(state, "stage", "run_2"))
+    assert not [
+        n for n in os.listdir(os.path.join(state, "lineage")) if n.startswith("run_2_")
+    ]
 
 
 def test_oracle_types_within_owned_range(tiny_dir):

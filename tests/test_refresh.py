@@ -13,6 +13,7 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import spark_jobs
 
 from keepright_spark import docs_store, pipeline
 from keepright_spark.tiling import DEFAULT_MARGIN_M, padded_tiles
@@ -111,24 +112,21 @@ def _copy(src: str, dst: str, engine: bool = True) -> str:
 
 def _assert_equals_fresh_build(spark, ds: str, tmp: str) -> int:
     """Every engine table equals a full prepare of a fresh copy of the
-    same docs (sorted rows, the tile column included), and so do the
-    cell census and the per-tile view digest.  Returns the Spark jobs
-    that full prepare ran."""
+    same docs (sorted rows, the tile column included), and so does the
+    per-tile summary.  Returns the Spark jobs that full prepare ran."""
     fresh = _copy(ds, os.path.join(tmp, "fresh"), engine=False)
-    before = _jobs(spark)
-    pipeline.prepare(spark, fresh)
-    full_jobs = len(_jobs(spark) - before)
+    with spark_jobs(spark) as jobs:
+        pipeline.prepare(spark, fresh)
     assert _stamp(fresh)["refresh"] == "full"
     for name in TABLES:
         got, want = _table(ds, name), _table(fresh, name)
         assert sorted(got, key=repr) == sorted(want, key=repr), name
         # one file per tile: refreshes do not pile up small files
         assert _files_per_tile(ds, name) == _files_per_tile(fresh, name), name
-    assert _stamp(ds)["cell_stats"] == _stamp(fresh)["cell_stats"]
-    # a refresh re-digests only the tiles it rewrote
-    assert _stamp(ds)["tile_digest"] == _stamp(fresh)["tile_digest"]
+    # a refresh re-summarizes only the tiles it rewrote
+    assert _stamp(ds)["tile_summary"] == _stamp(fresh)["tile_summary"]
     assert _stamp(ds)["schemas"] == _stamp(fresh)["schemas"]
-    return full_jobs
+    return len(jobs)
 
 
 def _files_per_tile(ds: str, name: str) -> dict:
@@ -148,10 +146,6 @@ def _file_bytes(ds: str, names: list[str]) -> dict:
                 with open(os.path.join(d, fn), "rb") as f:
                     out[os.path.relpath(os.path.join(d, fn), root), name] = f.read()
     return out
-
-
-def _jobs(spark) -> set:
-    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
 
 
 @pytest.fixture(scope="module")
@@ -239,16 +233,14 @@ def test_delta_prepare_job_budget(spark, world, ds, tmp_path):
     rows += [(f"node/{n}", []) for n in world.orphans[-5:]]
     _drop(spark, world, ds, rows, tmp)
 
-    before = _jobs(spark)
-    pipeline.prepare(spark, ds)
-    delta_jobs = len(_jobs(spark) - before)
+    with spark_jobs(spark) as delta_jobs:
+        pipeline.prepare(spark, ds)
     assert _stamp(ds)["refresh"] == "delta"
 
     fresh = _copy(ds, str(tmp_path / "fresh"), engine=False)
-    before = _jobs(spark)
-    pipeline.prepare(spark, fresh)
-    full_jobs = len(_jobs(spark) - before)
-    assert 0 < delta_jobs <= full_jobs // 2, (delta_jobs, full_jobs)
+    with spark_jobs(spark) as full_jobs:
+        pipeline.prepare(spark, fresh)
+    assert 0 < len(delta_jobs) <= len(full_jobs) // 2, (len(delta_jobs), len(full_jobs))
     for name in TABLES:
         assert sorted(_table(ds, name), key=repr) == sorted(
             _table(fresh, name), key=repr
@@ -305,12 +297,12 @@ def test_fallback_is_full_build(spark, world, ds, tmp_path, case):
         assert docs_store.changes_since(ds, 1) is None
     else:
         _drop(spark, world, ds, _fallback_rows(world, case), tmp)
-    before = _jobs(spark)
-    pipeline.prepare(spark, ds)
-    fallback_jobs = len(_jobs(spark) - before)
+    with spark_jobs(spark) as fallback_jobs:
+        pipeline.prepare(spark, ds)
     assert _stamp(ds)["refresh"] == "full"
     full_jobs = _assert_equals_fresh_build(spark, ds, str(tmp_path / "cmp"))
-    assert fallback_jobs <= full_jobs + FALLBACK_GUARD_JOBS, (fallback_jobs, full_jobs)
+    assert len(fallback_jobs) <= full_jobs + FALLBACK_GUARD_JOBS, (
+        len(fallback_jobs), full_jobs)
 
 
 def test_undecodable_id_fails_as_full_build(spark, world, ds, tmp_path):

@@ -4,27 +4,31 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
+from conftest import spark_jobs
 
 from keepright_spark import lifecycle, pipeline, watchdog
 from keepright_spark.watchdog import WatchdogError
 
 
-def test_base_table_guard(spark, tiny_dir):
-    v = pipeline.tiled_views(spark, tiny_dir, share_partitioning=False)
-    watchdog.assert_base_tables(v)  # populated: no raise
+def test_base_table_guard(spark, tiny_dir, tmp_path, monkeypatch):
+    """The guard reads the views' row counts from the engine stamp's
+    per-tile summary: no Spark job, and an empty view is named."""
+    pipeline.prepare(spark, tiny_dir)
+    summary = pipeline.tile_summary(tiny_dir)
+    with spark_jobs(spark) as jobs:
+        watchdog.assert_base_tables(summary)  # populated: no raise
+    assert jobs == []
 
-    # empty one view -> loud failure naming the view
-    empty_nodes = v.nodes.limit(0)
-    broken = type(v)(
-        **{
-            n: (empty_nodes if n == "nodes" else getattr(v, n))
-            for n in pipeline.VIEW_NAMES
-        }
-    )
+    # empty one view -> loud failure naming the view, before any check
+    broken = {t: {**e, "nodes": [0, 0, 0]} for t, e in summary.items()}
     with pytest.raises(WatchdogError, match="nodes"):
         watchdog.assert_base_tables(broken)
+    monkeypatch.setattr(pipeline, "tile_summary", lambda _: broken)
+    with pytest.raises(WatchdogError, match="nodes"):
+        lifecycle.run_persistent(spark, tiny_dir, str(tmp_path / "state"), [20])
 
 
 def test_watchdog_healthy_and_stale(spark, tiny_dir, tmp_path):
@@ -33,15 +37,25 @@ def test_watchdog_healthy_and_stale(spark, tiny_dir, tmp_path):
     assert watchdog.run_watchdog(tiny_dir, state) == []
 
     # stale: pretend 19 days passed since the last lineage write
-    now = os.path.getmtime(
-        os.path.join(state, "lineage", os.listdir(state + "/lineage")[0])
-    )
+    lineage = os.path.join(state, "lineage")
+    now = os.path.getmtime(os.path.join(lineage, os.listdir(lineage)[0]))
     issues = watchdog.run_watchdog(tiny_dir, state, now=now + 19 * 86400)
     assert any("older than 18 days" in i for i in issues)
     with pytest.raises(WatchdogError):
         watchdog.run_watchdog(
             tiny_dir, state, now=now + 19 * 86400, strict=True
         )
+
+    # a crashed later run's fresh lineage does not make a 19-day-old
+    # commit look fresh: the state is dated by the committed run only
+    with open(os.path.join(lineage, "run_2_group_0.json"), "w") as f:
+        json.dump({"run_seq": 2, "group": 0, "error_rows": 1}, f)
+    aged = time.time() - 19 * 86400
+    for fn in os.listdir(lineage):
+        if fn.startswith("run_1_"):
+            os.utime(os.path.join(lineage, fn), (aged, aged))
+    issues = watchdog.run_watchdog(tiny_dir, state)
+    assert any("older than 18 days" in i for i in issues), issues
 
 
 def test_watchdog_missing_and_floors(spark, tiny_dir, tmp_path):
