@@ -14,7 +14,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from keepright_spark import doc_oracles, docops
+from keepright_spark import doc_oracles, docops, docs_store
 from keepright_spark import media as media_mod
 from keepright_spark import oracles, pipeline, raster
 from keepright_spark.datagen import ensure_dataset, scale_for_sf_dir
@@ -146,7 +146,7 @@ def _mk_media_query(fn) -> Callable[[SparkSession, str], DataFrame]:
 def _mk_media_ref_query(fn) -> Callable[[SparkSession, str], DataFrame]:
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = ensure_dataset(scale_for_sf_dir(sf_dir))
-        docs = pipeline.load_docs(spark, d)
+        docs = docs_store.read_docs(spark, d)
         return fn(
             media_mod.media_view(docs),
             batch_decoder=media_mod.fake_decode_batch,
@@ -203,11 +203,9 @@ def _follower_cycle_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = os.path.join(DATA_ROOT, f"follower_{scale}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    if os.path.isdir(os.path.join(src, "docs.parquet")):
-        shutil.copytree(os.path.join(src, "docs.parquet"),
-                        os.path.join(work, "docs.parquet"))
-    else:
-        shutil.copy(os.path.join(src, "docs.parquet"), work)
+    for rel, _, _ in docs_store.docs_files(src):  # the generator's plain docs
+        copy = shutil.copytree if os.path.isdir(os.path.join(src, rel)) else shutil.copy
+        copy(os.path.join(src, rel), os.path.join(work, rel))
     shutil.copy(os.path.join(src, "MANIFEST.json"), work)
     state = os.path.join(work, "state")
     feed = os.path.join(work, "feed")
@@ -239,7 +237,7 @@ def _follower_cycle_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(FOLLOWER_TOMBSTONES)
     )
     ids = [r["id"] for r in orphans.collect()]
-    spans_t = pipeline.load_docs(spark, work).schema["spans"].dataType
+    spans_t = docs_store.read_docs(spark, work).schema["spans"].dataType
     batch = (
         spark.createDataFrame([(f"node/{i}",) for i in ids],
                               "doc_id string")
@@ -266,7 +264,7 @@ def _deleted_items_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from keepright_spark.checks import check_0010
 
     src = ensure_dataset(scale_for_sf_dir(sf_dir))
-    docs = pipeline.load_docs(spark, src)
+    docs = docs_store.read_docs(spark, src)
     return check_0010.run_planted(docs)
 
 
@@ -288,7 +286,7 @@ def _span_profile_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_ref, order) invariant as a queryable fingerprint column —
     oracle equality on it is span-sequence equality for every doc."""
     d = ensure_dataset(scale_for_sf_dir(sf_dir))
-    return media_mod.doc_span_profile(pipeline.load_docs(spark, d))
+    return media_mod.doc_span_profile(docs_store.read_docs(spark, d))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

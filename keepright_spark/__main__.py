@@ -27,7 +27,12 @@ from .session import get_spark
 
 def main() -> None:
     ap = argparse.ArgumentParser(prog="keepright_spark")
-    ap.add_argument("--dataset", required=True, help="dataset directory (docs.parquet + MANIFEST.json)")
+    ap.add_argument(
+        "--dataset",
+        required=True,
+        help="dataset directory: the docs table, and optionally a "
+        "MANIFEST.json with its tiles (DEFAULT_TILES without one)",
+    )
     ap.add_argument("--state", required=True, help="state directory (errors table, lineage, checkpoints)")
     ap.add_argument("--checks", help="comma-separated check ids (default: all)")
     ap.add_argument("--cores", type=int, default=None, help="local[*] cores")

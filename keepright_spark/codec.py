@@ -163,9 +163,11 @@ class OsmViews:
     h_segments: DataFrame | None = None
     # prepare-time cell-density census (engine_manifest.json,
     # pipeline.prepare): {"max_node_cell64": n, "max_seg_cell64": n} —
-    # the occupancy of the hottest 64 m grid cell.  spatial.spread()
-    # consults it to skip its balancing exchange on worlds where no
-    # cell is hot (the cluster analog is Iceberg table statistics).
+    # the occupancy of the hottest 64 m grid cell — plus "many_tiles"
+    # (tiled_views' tiles-per-partition rule).  spatial.spread()
+    # consults it to skip its balancing exchange on worlds with many
+    # tiles where no cell is hot (the cluster analog is Iceberg table
+    # statistics).
     cell_stats: dict | None = None
 
 

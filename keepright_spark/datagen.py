@@ -1697,13 +1697,8 @@ def island_seeds_per_tile(views: dict) -> dict[str, list[int]]:
     return {str(r.tile): [int(r.way_id)] for r in top.itertuples()}
 
 
-def write_dataset(
-    out_dir: str,
-    scale: str,
-    tiles: list[Tile] | None = None,
-    margin_m: float = DEFAULT_MARGIN_M,
-) -> None:
-    tiles = tiles or scale_tiles(scale)
+def write_dataset(out_dir: str, scale: str) -> None:
+    tiles = scale_tiles(scale)
     os.makedirs(os.path.join(out_dir, "oracle"), exist_ok=True)
     b = build_world(scale)
     _write_docs(b, os.path.join(out_dir, "docs.parquet"))
@@ -1724,7 +1719,7 @@ def write_dataset(
             ),
             os.path.join(out_dir, "webcache.parquet"),
         )
-    views = _oracle_views(b, tiles, margin_m)
+    views = _oracle_views(b, tiles, DEFAULT_MARGIN_M)
     seeds = island_seeds_per_tile(views)
     for name, df in views.items():
         if "tstamp" in df.columns:
@@ -1746,7 +1741,7 @@ def write_dataset(
                     [t.name, t.left, t.right, t.top, t.bottom] for t in tiles
                 ],
                 "island_seeds": seeds,
-                "margin_m": margin_m,
+                "margin_m": DEFAULT_MARGIN_M,
             },
             f,
         )

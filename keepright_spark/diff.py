@@ -25,7 +25,7 @@ re-crop each schema, re-run checks) for the docs-table world:
    tiles keep their rows byte-identically.
 
 The engine views follow the docs on their own: the ``prepare`` stamp
-carries a docs-file signature (pipeline._docs_signature) and the
+carries the docs table's signature (docs_store.signature) and the
 docs-store version its tables reflect, so after a replication upsert
 ``prepare`` rewrites only the tile partitions the batch's changelog
 reaches and re-summarizes only those, or re-derives every table when

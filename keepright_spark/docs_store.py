@@ -1,10 +1,18 @@
-"""Bucketed docs table — partition-scoped upserts for the follower.
+"""The docs table in both layouts, and partition-scoped upserts for
+the follower.
+
+A dataset dir holds its docs either as the generator / ingest output
+``docs.parquet`` (a file or a directory) or as the bucketed store
+below.  This module is the one place that tells them apart:
+``docs_files`` lists the files of the current table, and every reader
+takes that list — ``read_docs``, the engine stamp's ``signature``,
+``duckdb_docs_source`` for the oracles and the watchdog's input rules.
 
 The reference's replication apply touches only changed objects
 (osmosis ``--simc`` against the planet file, checks/planet.php:48-129);
 the round-4 follower instead rewrote the WHOLE docs table per
 micro-batch — correct, but O(|docs|) per drop, which at 100 TB means
-rewriting the planet every replication minute.  This module gives the
+rewriting the planet every replication minute.  The store gives the
 docs table the same treatment the engine views already get: a
 hive-style layout keyed by a deterministic doc-id bucket, where an
 upsert rewrites ONLY the buckets containing batch doc_ids.
@@ -42,6 +50,7 @@ partition-level-rewrite + snapshot-pointer semantics on plain parquet.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -53,6 +62,7 @@ from pyspark.sql import functions as F
 
 from .lib import write_json
 
+PLAIN_DOCS = "docs.parquet"  # the generator / ingest layout
 STORE_DIR = "docs_store"
 MANIFEST = "BUCKETS.json"
 EMPTY_BUCKET = "b_empty"
@@ -79,23 +89,58 @@ def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
-def bucket_paths(dataset_dir: str, manifest: dict | None = None) -> list[str]:
-    """Current bucket directories, deduped (empty buckets share one
-    zero-row carrier dir) and sorted for a stable read order."""
-    man = manifest or read_manifest(dataset_dir)
-    if man is None:
-        raise FileNotFoundError(f"no docs store under {dataset_dir}")
-    root = store_root(dataset_dir)
-    return [
-        os.path.join(root, d) for d in sorted(set(man["buckets"].values()))
-    ]
+def docs_files(dataset_dir: str) -> list[tuple[str, int, int]]:
+    """The files of the current docs table, one entry per path a read
+    opens: (path relative to ``dataset_dir``, bytes, newest mtime_ns),
+    a directory's over every file below it.
+
+    With a store manifest the paths are its referenced bucket dirs,
+    deduped (empty buckets share one zero-row carrier dir) and sorted
+    for a stable read order; the manifest is the authority, so a
+    leftover plain file is not listed.  Otherwise the path is the
+    generator or ingest output ``docs.parquet``, a file or a directory,
+    and the list is empty when there is none."""
+    man = read_manifest(dataset_dir)
+    if man is not None:
+        rels = [os.path.join(STORE_DIR, d) for d in sorted(set(man["buckets"].values()))]
+    elif os.path.exists(os.path.join(dataset_dir, PLAIN_DOCS)):
+        rels = [PLAIN_DOCS]
+    else:
+        rels = []
+    out = []
+    for rel in rels:
+        path = os.path.join(dataset_dir, rel)
+        files = [path] if os.path.isfile(path) else [
+            os.path.join(root, fn) for root, _dirs, fns in os.walk(path) for fn in fns
+        ]
+        sts = [os.stat(f) for f in files]
+        out.append((rel, sum(st.st_size for st in sts),
+                    max((st.st_mtime_ns for st in sts), default=0)))
+    return out
 
 
 def read_docs(spark: SparkSession, dataset_dir: str) -> DataFrame:
-    """The docs table from the store (union of current bucket dirs —
-    the bucket key lives in the directory name, not the rows, so the
-    schema is exactly the plain ``docs.parquet`` schema)."""
-    return spark.read.parquet(*bucket_paths(dataset_dir))
+    """The docs table in either layout (``docs_files``).  The bucket
+    key lives in the store's directory names, not its rows, so both
+    layouts read with the same schema."""
+    paths = [os.path.join(dataset_dir, rel) for rel, _, _ in docs_files(dataset_dir)]
+    if not paths:
+        raise FileNotFoundError(f"no docs table under {dataset_dir}")
+    return spark.read.parquet(*paths)
+
+
+def signature(dataset_dir: str) -> str:
+    """Cheap driver-side change signature of the docs table: a hash of
+    ``docs_files``, so ``prepare`` sees a stale engine dir without
+    reading a row.  An upsert renames the bucket dirs it rewrites, so
+    it changes the signature even where sizes and mtimes collide.  The
+    paths are relative: a copy of the dataset that keeps mtimes
+    (``shutil.copytree``) keeps the signature, and with it the engine
+    stamp."""
+    h = hashlib.sha256()
+    for rel, size, mtime_ns in docs_files(dataset_dir):
+        h.update(f"{rel}:{size}:{mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
 
 
 def _sweep_orphans(root: str, man: dict) -> None:
@@ -150,7 +195,7 @@ def migrate(spark: SparkSession, dataset_dir: str) -> dict:
     bucket-scoped.  The plain file is removed after the manifest
     commits (the manifest is the authority; a crash in between leaves
     both, and readers prefer the store)."""
-    docs_path = os.path.join(dataset_dir, "docs.parquet")
+    docs_path = os.path.join(dataset_dir, PLAIN_DOCS)
 
     def _drop_plain() -> None:
         if os.path.isdir(docs_path):
@@ -164,7 +209,7 @@ def migrate(spark: SparkSession, dataset_dir: str) -> dict:
         # a stale docs.parquet behind — the manifest is the authority
         _drop_plain()
         return man
-    docs = spark.read.parquet(docs_path)
+    docs = read_docs(spark, dataset_dir)
     root = store_root(dataset_dir)
     os.makedirs(root, exist_ok=True)
 
@@ -283,34 +328,11 @@ def changes_since(dataset_dir: str, version: int) -> list[str] | None:
     return sorted(ids)
 
 
-def signature_entries(dataset_dir: str):
-    """(name, size, mtime_ns) per store file, in stable order — the
-    docs-change signature input for pipeline._docs_signature.  Version
-    bumps rename directories, so any committed upsert changes the
-    signature even if sizes collide."""
-    man = read_manifest(dataset_dir)
-    if man is None:
-        return None
-    root = store_root(dataset_dir)
-    out = []
-    for d in sorted(set(man["buckets"].values())):
-        p = os.path.join(root, d)
-        for fn in sorted(os.listdir(p)) if os.path.isdir(p) else []:
-            try:
-                st = os.stat(os.path.join(p, fn))
-            except OSError:
-                continue
-            out.append((f"{d}/{fn}", st.st_size, st.st_mtime_ns))
-    return out
-
-
 def duckdb_docs_source(dataset_dir: str) -> str:
     """DuckDB ``read_parquet`` argument for the docs table in either
-    layout (the oracles read whatever the engine reads)."""
-    man = read_manifest(dataset_dir)
-    if man is None:
-        return f"'{dataset_dir}/docs.parquet'"
-    globs = ", ".join(
-        f"'{p}/*.parquet'" for p in bucket_paths(dataset_dir, man)
-    )
-    return f"[{globs}]"
+    layout: the paths of ``docs_files``, a directory's parquet files by
+    glob (the oracles read whatever the engine reads)."""
+    paths = [os.path.join(dataset_dir, rel) for rel, _, _ in docs_files(dataset_dir)]
+    return "[" + ", ".join(
+        f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'" for p in paths
+    ) + "]"

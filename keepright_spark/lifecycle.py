@@ -346,7 +346,7 @@ def run_persistent(
     registry = available_checks()
     if check_ids is None:
         check_ids = sorted(registry)
-    tiles = pipeline.dataset_tiles(dataset_dir) or []
+    tiles = pipeline.dataset_tiles(dataset_dir)
     if only_tiles is not None:
         # diff-update scope: process only the affected tiles; an empty
         # scope (no changes) returns the committed table untouched

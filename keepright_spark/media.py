@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import pipeline
+from . import docs_store, pipeline
 
 
 def media_view(docs: DataFrame) -> DataFrame:
@@ -56,7 +56,7 @@ def media_view(docs: DataFrame) -> DataFrame:
 def tiled_media(spark: SparkSession, dataset_dir: str) -> DataFrame:
     """media_view × object tile assignment (from the materialized
     engine views, margin duplication included)."""
-    docs = pipeline.load_docs(spark, dataset_dir)
+    docs = docs_store.read_docs(spark, dataset_dir)
     mv = media_view(docs)
     v = pipeline.tiled_views(spark, dataset_dir, share_partitioning=False)
     ot = (

@@ -319,12 +319,13 @@ def oracle_0010_deleted(d: str) -> str:
         MSG_10, MSG_11, MSG_12,
         VICTIM_REL_NODES, VICTIM_REL_WAYS, VICTIM_WAY_NODES,
     )
+    from .docs_store import duckdb_docs_source
 
     return f"""
 WITH ex AS (
     SELECT CAST(split_part(doc_id, '/', 2) AS BIGINT) AS id,
            UNNEST(spans) AS s
-    FROM read_parquet('{d}/docs.parquet')
+    FROM read_parquet({duckdb_docs_source(d)})
 ),
 noderefs AS (
     SELECT id AS way_id,

@@ -193,9 +193,10 @@ def ingest_osm_xml(
     n_files: int | None = None,
 ) -> str:
     """Materialize an engine dataset directory from raw OSM XML:
-    writes ``<dataset_dir>/docs.parquet`` (the driver-contract docs
-    table).  Tiles must be supplied via a MANIFEST.json in
-    ``dataset_dir`` or the engine falls back to DEFAULT_TILES."""
+    writes ``<dataset_dir>/docs.parquet``, the plain layout of the
+    docs table (docs_store).  It writes no MANIFEST.json: copy one in
+    to set the tiles, else the engine uses DEFAULT_TILES
+    (pipeline.dataset_tiles)."""
     import os
 
     docs = load_osm_xml(spark, xml_path)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from . import checks as check_registry
+from . import docs_store
 from .codec import OsmViews, decode
 from .datagen import GEN_VERSION
 from .errors import build_error_view
@@ -62,55 +63,43 @@ STAMP = "engine_manifest.json"
 _REFRESH_DOC_ID = re.compile(r"(node|way)/([1-9][0-9]{0,17})")
 
 
-def load_docs(spark: SparkSession, dataset_dir: str) -> DataFrame:
-    """Docs table in either layout: the bucketed store (after any
-    streaming upsert — docs_store.py) or the generator/ingest plain
-    ``docs.parquet``."""
-    from . import docs_store
-
-    if docs_store.read_manifest(dataset_dir) is not None:
-        return docs_store.read_docs(spark, dataset_dir)
-    return spark.read.parquet(f"{dataset_dir}/docs.parquet")
-
-
-def dataset_tiles(dataset_dir: str) -> list[Tile] | None:
-    """Tile list recorded in the dataset's MANIFEST.json, or None when
-    absent."""
+def _dataset_manifest(dataset_dir: str) -> dict:
+    """The dataset's MANIFEST.json, or {} when it has none (an
+    ``--ingest-xml`` dataset)."""
     try:
         with open(os.path.join(dataset_dir, "MANIFEST.json")) as f:
-            m = json.load(f)
-        return [Tile(n, left, right, top, bottom) for n, left, right, top, bottom in m["tiles"]]
-    except (OSError, KeyError, ValueError):
-        return None
+            return json.load(f)
+    except (OSError, ValueError):
+        return {}
 
 
-def _tiles(dataset_dir: str) -> list[Tile]:
-    """The tiling a dataset is prepared and clipped with."""
-    return dataset_tiles(dataset_dir) or DEFAULT_TILES
+def dataset_tiles(dataset_dir: str) -> list[Tile]:
+    """The tiling a dataset is prepared, checked and clipped with: the
+    tiles its MANIFEST.json records, else DEFAULT_TILES."""
+    rows = _dataset_manifest(dataset_dir).get("tiles")
+    return [Tile(*row) for row in rows] if rows else list(DEFAULT_TILES)
 
 
 def prepare(spark: SparkSession, dataset_dir: str) -> str:
     """Bring the decoded + tiled engine tables under
-    ``<dataset_dir>/engine/`` up to date with the docs and return that
-    dir.
+    ``<dataset_dir>/engine/`` up to date with the docs table
+    (docs_store) and return that dir.
 
     The stamp (``engine_manifest.json``) records the generator and
-    engine versions, the docs signature, the docs-store version the
-    tables reflect, how they were last brought up to date (``refresh``:
-    ``"full"`` or ``"delta"``), each table's Spark schema and the
-    per-tile summary of the tables (``_summarize``).  A stamp that
-    matches the docs returns at once.  A stamp behind the store whose
-    every later changelog is kept refreshes only the rows those batches
-    reach (``_refresh``) and re-summarizes only the tiles it rewrote; a
-    tile the refresh left empty loses its entry.  Anything else — the
-    first build, a plain ``docs.parquet``, a lost changelog, a batch
-    the refresh cannot prove tile-stable, a crash mid-refresh —
-    re-derives every table from all docs (``_build``) and summarizes
-    every tile."""
-    from . import docs_store
-
+    engine versions, the docs signature (docs_store.signature), the
+    docs-store version the tables reflect, how they were last brought
+    up to date (``refresh``: ``"full"`` or ``"delta"``), each table's
+    Spark schema and the per-tile summary of the tables
+    (``_summarize``).  A stamp whose signature matches the docs returns
+    at once.  A stamp behind the store whose every later changelog is
+    kept refreshes only the rows those batches reach (``_refresh``) and
+    re-summarizes only the tiles it rewrote; a tile the refresh left
+    empty loses its entry.  Anything else — the first build, a plain
+    docs layout, a lost changelog, a batch the refresh cannot prove
+    tile-stable, a crash mid-refresh — re-derives every table from all
+    docs (``_build``) and summarizes every tile."""
     out = os.path.join(dataset_dir, "engine")
-    docs_sig = _docs_signature(dataset_dir)
+    docs_sig = docs_store.signature(dataset_dir)
     st = _read_stamp(out)
     if st is not None and st.get("docs_sig") == docs_sig:
         return out
@@ -118,7 +107,7 @@ def prepare(spark: SparkSession, dataset_dir: str) -> str:
     changed = None
     if st is not None and man is not None and st.get("store_version") is not None:
         changed = docs_store.changes_since(dataset_dir, st["store_version"])
-    docs = load_docs(spark, dataset_dir)
+    docs = docs_store.read_docs(spark, dataset_dir)
     rewritten = None
     if changed is not None:
         rewritten = _refresh(spark, dataset_dir, out, st, changed, docs)
@@ -216,7 +205,7 @@ def _build(spark: SparkSession, dataset_dir: str, out: str, docs: DataFrame) -> 
     schemas = {}
     with materialization_scope():
         with _decoded(docs) as base:
-            v = assign_tiles(base, _tiles(dataset_dir), DEFAULT_MARGIN_M)
+            v = assign_tiles(base, dataset_tiles(dataset_dir), DEFAULT_MARGIN_M)
             for name in VIEW_NAMES:
                 schemas[name] = _write_tiled(
                     getattr(v, name), f"{out}/{name}.parquet", n_files
@@ -334,7 +323,7 @@ def _refresh(
         new_refs = defaultdict(list)
         for r in new_wn:
             new_refs[r.way_id].append((r.sequence_id, r.node_id))
-        tiles = _tiles(dataset_dir)
+        tiles = dataset_tiles(dataset_dir)
         for n in n_c:
             if n not in new_pos:
                 if n in referenced:
@@ -521,37 +510,6 @@ def _summarize(
     return dict(summary)
 
 
-def _docs_signature(dataset_dir: str) -> str:
-    """Cheap driver-side change signature of the docs table (file
-    names + sizes + mtimes) — a replication diff lands as new parquet
-    files, so ``prepare`` sees a stale engine dir without reading a
-    row."""
-    import hashlib
-
-    from . import docs_store
-
-    h = hashlib.sha256()
-    store_entries = docs_store.signature_entries(dataset_dir)
-    if store_entries is not None:
-        for name, size, mtime_ns in store_entries:
-            h.update(f"{name}:{size}:{mtime_ns}".encode())
-        return h.hexdigest()[:16]
-    docs = os.path.join(dataset_dir, "docs.parquet")
-    if os.path.isdir(docs):
-        for root, _dirs, files in sorted(os.walk(docs)):
-            for fn in sorted(files):
-                p = os.path.join(root, fn)
-                try:
-                    st = os.stat(p)
-                except OSError:
-                    continue
-                h.update(f"{fn}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.isfile(docs):
-        st = os.stat(docs)
-        h.update(f"docs.parquet:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
-
-
 # helper tables materialized alongside the views — the twin of the
 # reference's prepare_helpertables.php: every check that needs layers /
 # oneways / lengths / segments reads the parquet instead of re-running
@@ -582,18 +540,21 @@ def _helper_frames(v: OsmViews) -> dict:
 def tiled_views(
     spark: SparkSession,
     dataset_dir: str,
-    share_partitioning: bool | str = "auto",
+    share_partitioning: bool = True,
 ) -> OsmViews:
     """Views over the materialized engine tables (prepared on demand).
 
-    With ``share_partitioning`` every view is hash-partitioned by tile
-    once and cached; because every downstream join / aggregation /
-    window keys on a (tile, …) prefix, Catalyst reuses this single
-    partitioning across all checks (with
+    With ``share_partitioning`` every view is cached, and, on a world
+    with many tiles per partition, hash-partitioned by tile first;
+    because every downstream join / aggregation / window keys on a
+    (tile, …) prefix, Catalyst then reuses this single partitioning
+    across all checks (with
     ``spark.sql.requireAllClusterKeysForCoPartition=false``, set by
     session.get_spark) and the per-check shuffles disappear — the
     cluster analog is Iceberg tables partitioned+bucketed by tile,
-    where the scan itself reports the distribution.
+    where the scan itself reports the distribution.  ``False`` skips
+    caching entirely (per-tile-group runs rely on partition pruning
+    instead).
 
     Exchange elimination is only a win while tiles ≫ partitions: with
     n_tiles within ~4× of the partition count, tile-hash placement is
@@ -601,39 +562,25 @@ def tiled_views(
     whole tiles through single tasks (measured on the 20-tile dense
     world at 4 cores: 0400 28.9 s → 20.1 s, 0050 23.6 s → 15.7 s by
     dropping the tile repartition and letting each join shuffle on
-    its full, finer key).  ``share_partitioning="auto"`` (default)
-    therefore caches the views but only applies the shared tile
-    repartition when ``n_tiles ≥ 4 × shuffle_partitions``; ``True``
-    forces it, ``False`` skips caching entirely (per-tile-group runs
-    rely on partition pruning instead).
+    its full, finer key).  So the rule ``n_tiles ≥ 4 ×
+    shuffle_partitions`` is evaluated here, once: it gates the shared
+    repartition and rides in ``cell_stats["many_tiles"]`` to
+    spatial.spread, whose exchange skip it gates too.
     """
     out = prepare(spark, dataset_dir)
-    seeds = None
-    try:
-        with open(os.path.join(dataset_dir, "MANIFEST.json")) as f:
-            seeds = json.load(f).get("island_seeds")
-    except (OSError, ValueError):
-        pass
     st = _read_stamp(out)
-    # the hottest cell over all tiles; the tile count feeds spread()'s
-    # lumpy-placement gate (few tiles hashed into ~as-many partitions →
-    # balls-in-bins skew)
-    n_tiles = len(_tiles(dataset_dir))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    # the hottest cell over all tiles, and the many-tiles rule
     cell_stats = {
         stat: max((e[stat] for e in st["tile_summary"].values()), default=0)
         for stat in CELL_STATS
     }
-    cell_stats["n_tiles"] = n_tiles
-
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if share_partitioning == "auto":
-        cache, tile_repart = True, n_tiles >= 4 * n_part
-    else:
-        cache = tile_repart = bool(share_partitioning)
+    cell_stats["many_tiles"] = len(dataset_tiles(dataset_dir)) >= 4 * n_part
+    tile_repart = share_partitioning and cell_stats["many_tiles"]
 
     def _load(name: str) -> DataFrame:
         df = _read_table(spark, out, name, st["schemas"])
-        if cache:
+        if share_partitioning:
             from pyspark.storagelevel import StorageLevel
 
             if tile_repart:
@@ -643,10 +590,10 @@ def tiled_views(
 
     v = OsmViews(
         **{name: _load(name) for name in VIEW_NAMES + HELPER_NAMES},
-        island_seeds=seeds,
+        island_seeds=_dataset_manifest(dataset_dir).get("island_seeds"),
         cell_stats=cell_stats,
     )
-    if cache:
+    if share_partitioning:
         # materialize caches eagerly: the staged runner submits check
         # jobs concurrently, and a cold cache would be computed N times
         # in parallel (wasted work, though not incorrect)
@@ -729,4 +676,4 @@ def run_dataset(
     spark: SparkSession, dataset_dir: str, check_ids: list[int] | None = None
 ) -> DataFrame:
     v = tiled_views(spark, dataset_dir)
-    return run_checks(v, check_ids, _tiles(dataset_dir))
+    return run_checks(v, check_ids, dataset_tiles(dataset_dir))

@@ -242,7 +242,8 @@ def spread(
 
     ``stats``: the prepare-time cell census (OsmViews.cell_stats).
     When it proves no ``stat`` cell exceeds ``hot_limit`` AND the
-    world has plenty of tiles per partition, the exchange is skipped —
+    world has plenty of tiles per partition (``many_tiles``, the rule
+    pipeline.tiled_views evaluates), the exchange is skipped —
     with every bucket cold and tiles ≫ partitions, per-tile funneling
     is linear in tile size (the same bound as every other
     exchange-free (tile,…) join) and the repartition is pure cost:
@@ -257,7 +258,6 @@ def spread(
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     if stats is not None:
         cold = stats.get(stat, hot_limit + 1) <= hot_limit
-        many_tiles = stats.get("n_tiles", 0) >= 4 * n
-        if cold and many_tiles:
+        if cold and stats.get("many_tiles", False):
             return df
     return df.repartition(n, *keys)

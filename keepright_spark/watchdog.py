@@ -11,7 +11,9 @@ dataset + state-directory artifacts:
   ``lifecycle.run_persistent`` before any check executes.
 * input ("planet file") size + age — watchdog.php:39-53 with the
   limits of config/config.php:188-207 (planet_minimum_filesize,
-  schema_max_age); here the input is the docs.parquet directory.
+  schema_max_age); here the input is the files of the current docs
+  table in either layout (docs_store.docs_files), so a docs-store
+  crash orphan cannot mask staleness.
 * result freshness + floors — watchdog.php:57-88 checks result files
   exist, are big enough and young enough; here the results are the
   committed errors table and run manifest (read through
@@ -66,35 +68,6 @@ def assert_base_tables(summary: dict) -> None:
         )
 
 
-def _dir_bytes(path: str) -> int:
-    """Total bytes of a file OR directory tree (the docs table may be
-    a single parquet file or a partitioned directory)."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
-def _newest_mtime(path: str) -> float | None:
-    if os.path.isfile(path):
-        return os.path.getmtime(path)
-    newest = None
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                mt = os.path.getmtime(os.path.join(root, f))
-            except OSError:
-                continue
-            newest = mt if newest is None else max(newest, mt)
-    return newest
-
-
 def run_watchdog(
     dataset_dir: str,
     state_dir: str | None = None,
@@ -111,29 +84,17 @@ def run_watchdog(
     now = time.time() if now is None else now
     issues: list[str] = []
 
-    # input file size + age (watchdog.php:39-53) — the docs table is
-    # either plain docs.parquet or the bucketed store (docs_store.py);
-    # for the store, size/age walk only manifest-referenced buckets so
-    # crash orphans cannot mask staleness
-    from . import docs_store
+    # input size + age (watchdog.php:39-53)
+    from .docs_store import docs_files
 
-    paths = None
-    if docs_store.read_manifest(dataset_dir) is not None:
-        paths = docs_store.bucket_paths(dataset_dir)
+    files = docs_files(dataset_dir)
+    if not files:
+        issues.append(f"input docs table not found under {dataset_dir}")
     else:
-        docs = os.path.join(dataset_dir, "docs.parquet")
-        if os.path.exists(docs):
-            paths = [docs]
-    if paths is None:
-        issues.append(
-            f"input docs table not found: {dataset_dir}/docs.parquet"
-        )
-    else:
-        size = sum(_dir_bytes(p) for p in paths)
+        size = sum(n for _, n, _ in files)
         if size < cfg["docs_minimum_bytes"]:
             issues.append(f"input docs table is too small. Size is {size}")
-        mts = [m for m in (_newest_mtime(p) for p in paths) if m is not None]
-        if mts and max(mts) < now - cfg["state_max_age_sec"]:
+        if max(m for _, _, m in files) / 1e9 < now - cfg["state_max_age_sec"]:
             issues.append(
                 "input docs table is older than "
                 f"{cfg['state_max_age_sec'] // 86400} days"

@@ -57,10 +57,10 @@ def test_0010_deleted_items_vs_oracle(spark, small_dir):
 
 def test_0010_consistent_world_is_clean(spark, small_dir):
     # On the pristine world nothing is deleted — the scan must be empty.
-    from keepright_spark import pipeline
+    from keepright_spark import docs_store
     from keepright_spark.checks import check_0010
 
-    docs = pipeline.load_docs(spark, small_dir)
+    docs = docs_store.read_docs(spark, small_dir)
     assert check_0010.run_docs(docs).count() == 0
 
 

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from keepright_spark import mercator
 from keepright_spark.codec import decode
-from keepright_spark.pipeline import load_docs
+from keepright_spark.docs_store import read_docs
 
 
 def test_mercator_reference_values():
@@ -36,7 +36,7 @@ def test_mercator_roundtrip():
 def test_span_sequence_invariant(spark, tiny_dir):
     """The engine must never rewrite documents: decoding and rebuilding
     the (kind, text, media_ref, order) sequence is the identity."""
-    docs = load_docs(spark, tiny_dir)
+    docs = read_docs(spark, tiny_dir)
     n_docs = docs.count()
     assert n_docs > 0
 
@@ -78,7 +78,7 @@ def test_span_sequence_invariant(spark, tiny_dir):
 def test_decode_views(spark, tiny_dir):
     import duckdb
 
-    docs = load_docs(spark, tiny_dir)
+    docs = read_docs(spark, tiny_dir)
     v = decode(docs)
     con = duckdb.connect()
 

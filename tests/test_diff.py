@@ -10,7 +10,7 @@ import shutil
 from conftest import spark_jobs
 from pyspark.sql import functions as F
 
-from keepright_spark import diff, lifecycle, pipeline
+from keepright_spark import diff, docs_store, lifecycle, pipeline
 
 CHECKS = [20, 170]
 
@@ -146,6 +146,18 @@ def test_docs_signature_sees_a_rewritten_docs_file(tmp_path):
     ds = tmp_path / "ds"
     ds.mkdir()
     (ds / "docs.parquet").write_bytes(b"v1")
-    before = pipeline._docs_signature(str(ds))
+    before = docs_store.signature(str(ds))
     (ds / "docs.parquet").write_bytes(b"v2 longer")
-    assert pipeline._docs_signature(str(ds)) != before
+    assert docs_store.signature(str(ds)) != before
+
+
+def test_copied_dataset_keeps_its_engine_stamp(spark, tiny_dir, tmp_path):
+    """The docs signature hashes paths relative to the dataset dir, so
+    a copytree of a prepared dataset (mtimes kept) is prepared already:
+    ``prepare`` on the copy runs no Spark job."""
+    pipeline.prepare(spark, tiny_dir)
+    ds = str(tmp_path / "copy")
+    shutil.copytree(tiny_dir, ds)
+    with spark_jobs(spark) as jobs:
+        pipeline.prepare(spark, ds)
+    assert jobs == []

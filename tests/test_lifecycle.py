@@ -101,6 +101,28 @@ def test_persistent_run_resume(spark, tiny_dir, tmp_path):
         assert tl[(2, et)] == (n, 0)     # identical re-run, delta 0
 
 
+def test_run_without_dataset_manifest(spark, tiny_dir, tmp_path):
+    """A dataset dir with no MANIFEST.json (what ``--ingest-xml``
+    writes) runs on DEFAULT_TILES.  The t world is tiled with exactly
+    those, so a copy of its docs alone commits the same live rows."""
+    import shutil
+
+    from keepright_spark.tiling import DEFAULT_TILES
+
+    assert pipeline.dataset_tiles(tiny_dir) == DEFAULT_TILES
+    ds = tmp_path / "ds"
+    ds.mkdir()
+    shutil.copy(os.path.join(tiny_dir, "docs.parquet"), ds)
+
+    def live(df):
+        rows = df.filter(F.col("state") != "cleared").select(ERROR_COLS).collect()
+        return sorted(tuple(str(x) for x in r) for r in rows)
+
+    got = live(lifecycle.run_persistent(spark, str(ds), str(tmp_path / "s1"), [20]))
+    want = live(lifecycle.run_persistent(spark, tiny_dir, str(tmp_path / "s2"), [20]))
+    assert got == want and got
+
+
 def test_crash_resume_uncommitted_run(spark, tiny_dir, tmp_path, monkeypatch):
     """A restart after a crash mid-run must resume the SAME run_seq,
     reuse its completed tile groups, and finish with a committed

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from keepright_spark import media, pipeline
+from keepright_spark import docs_store, media
 
 
 def test_media_view_and_census(spark, tiny_dir):
@@ -83,7 +83,7 @@ def test_decode_plumbing(spark, tiny_dir):
 def test_media_transforms(spark, tiny_dir):
     """Resize / frame-sample / features over the fake codec: decode is
     per DISTINCT (ref, mime); the transform math honors its contracts."""
-    docs = pipeline.load_docs(spark, tiny_dir)
+    docs = docs_store.read_docs(spark, tiny_dir)
     mv = media.media_view(docs)
     n_refs = (
         mv.filter(F.col("media_ref").isNotNull())
@@ -144,7 +144,7 @@ def test_doc_span_profile(spark, tiny_dir):
 
     from keepright_spark.oracles import oracle_doc_span_profile
 
-    docs = pipeline.load_docs(spark, tiny_dir)
+    docs = docs_store.read_docs(spark, tiny_dir)
     got = media.doc_span_profile(docs).toPandas()
     con = duckdb.connect()
     exp = con.sql(oracle_doc_span_profile(tiny_dir)).df()

@@ -12,7 +12,7 @@ import xml.etree.ElementTree as ET
 
 import pytest
 
-from keepright_spark import codec, osm_xml, pipeline
+from keepright_spark import codec, docs_store, osm_xml, pipeline
 from keepright_spark.datagen import ensure_dataset
 
 VIEW_COLS = {
@@ -95,7 +95,7 @@ def tiny_dir():
 
 
 def test_xml_roundtrip_decodes_to_identical_views(spark, tiny_dir, tmp_path):
-    docs = pipeline.load_docs(spark, tiny_dir)
+    docs = docs_store.read_docs(spark, tiny_dir)
     base = codec.decode(docs)
     xml_path = str(tmp_path / "world.osm")
     _write_xml(base, xml_path)
@@ -127,7 +127,7 @@ def test_multi_file_ingest_parallelism(spark, tiny_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    docs = pipeline.load_docs(spark, tiny_dir)
+    docs = docs_store.read_docs(spark, tiny_dir)
     base = codec.decode(docs)
     xml_path = str(tmp_path / "w0.osm")
     _write_xml(base, xml_path)
@@ -155,7 +155,7 @@ def test_ingested_dataset_runs_checks(spark, tiny_dir, tmp_path):
     pipeline end-to-end (MANIFEST copied so tiling matches)."""
     import shutil
 
-    docs = pipeline.load_docs(spark, tiny_dir)
+    docs = docs_store.read_docs(spark, tiny_dir)
     base = codec.decode(docs)
     xml_path = str(tmp_path / "world.osm")
     _write_xml(base, xml_path)

@@ -19,7 +19,7 @@ def test_tag_filter_pushdown(spark, tiny_dir):
     """0100's amenity filter must reach the node_tags parquet scan
     (probed on the uncached views — the shared-partitioning cache
     replaces file scans with InMemoryTableScan)."""
-    # the auto-mode cache registers the bare parquet scans with the
+    # the default-mode cache registers the bare parquet scans with the
     # CacheManager, which would substitute InMemoryTableScan into this
     # uncached probe if an earlier test populated it
     spark.catalog.clearCache()
@@ -41,25 +41,29 @@ def test_tile_partition_pruning(spark, tiny_dir):
     assert "PartitionFilters" in plan and "tile" in plan.split("PartitionFilters", 1)[1][:200]
 
 
-def test_shared_tile_partitioning_cuts_exchanges(spark, tiny_dir):
+def test_shared_tile_partitioning_cuts_exchanges(spark, small_dir):
     """With the tile-partitioned cache + subset co-partition matching,
     a (tile, …)-keyed join over two views must not insert any
-    exchange; the single cached repartition serves every consumer."""
-    from pyspark.sql import functions as F
-
+    exchange; the single cached repartition serves every consumer.
+    The default mode applies it on the 18-tile s world at 4 shuffle
+    partitions (18 ≥ 4 × 4)."""
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # force the shared tile partitioning (auto would skip it on
-        # the 2-tile test world — the low-tile gate is the point)
-        v = pipeline.tiled_views(spark, tiny_dir, share_partitioning=True)
+        v = pipeline.tiled_views(spark, small_dir)
+        assert v.cell_stats["many_tiles"]
         j = v.way_tags.join(
             v.way_nodes, ["tile", "way_id"]
         ).groupBy("tile", "way_id").count()
         plan = j._jdf.queryExecution().executedPlan().toString()
     finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # the 4-partition caches must not serve later tests
+        spark.catalog.clearCache()
     # the only exchanges allowed are the cache's own REPARTITION_BY_NUM
     # (shown inside the InMemoryRelation lineage); a per-join
     # ENSURE_REQUIREMENTS shuffle means the shared partitioning was
@@ -100,7 +104,7 @@ def test_broadcast_rules(spark, tiny_dir):
 
 
 def test_auto_partitioning_skips_repartition_on_low_tile_worlds(spark, tiny_dir):
-    """share_partitioning="auto" must NOT apply the shared tile
+    """The default share_partitioning must NOT apply the shared tile
     repartition when tiles are within 4x of the partition count (the
     2-tile test world): tile-hash placement would funnel whole tiles
     through single tasks, so each join shuffles on its full key
@@ -110,7 +114,8 @@ def test_auto_partitioning_skips_repartition_on_low_tile_worlds(spark, tiny_dir)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        v = pipeline.tiled_views(spark, tiny_dir)  # default: auto
+        v = pipeline.tiled_views(spark, tiny_dir)
+        assert not v.cell_stats["many_tiles"]
         j = v.way_tags.join(
             v.way_nodes, ["tile", "way_id"]
         ).groupBy("tile", "way_id").count()
@@ -187,3 +192,39 @@ def test_file_replace_only_through_lib():
     lines, start = inspect.getsourcelines(lib.write_json)
     inside = range(start, start + len(lines))
     assert len(found) == 1 and found[0][0] == "lib.py" and found[0][1] in inside, found
+
+
+def test_docs_table_read_only_through_docs_store():
+    """docs_store is the one module that tells the docs layouts apart:
+    no other module builds a ``docs.parquet`` path in code, except the
+    two writers of the plain layout (datagen, osm_xml).  Docstrings do
+    not count."""
+    import ast
+    import pathlib
+
+    import keepright_spark
+
+    root = pathlib.Path(keepright_spark.__file__).parent
+    writers = {root / n for n in ("docs_store.py", "datagen.py", "osm_xml.py")}
+    found = []
+    for p in [*sorted(root.rglob("*.py")), root.parent / "__spark_entry__.py"]:
+        if p in writers:
+            continue
+        tree = ast.parse(p.read_text())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                                 ast.AsyncFunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+        }
+        found += [
+            (p.name, node.lineno)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "docs.parquet" in node.value
+            and id(node) not in docstrings
+        ]
+    assert not found, found

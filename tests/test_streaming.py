@@ -12,7 +12,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from keepright_spark import diff, lifecycle, pipeline, streaming
+from keepright_spark import diff, docs_store, lifecycle, streaming
 from keepright_spark.datagen import ensure_dataset
 
 CHECKS = [20, 120]
@@ -60,7 +60,7 @@ def test_stream_drop_updates_errors(spark, tmp_path):
         .orderBy("object_id")
         .first()["object_id"]
     )
-    docs = pipeline.load_docs(spark, ds)
+    docs = docs_store.read_docs(spark, ds)
     n_before = docs.count()
     tomb = docs.filter(F.col("doc_id") == f"node/{victim}").select(
         "doc_id", F.expr("array()").cast(docs.schema["spans"].dataType
@@ -78,7 +78,7 @@ def test_stream_drop_updates_errors(spark, tmp_path):
     streaming.process_available(spark, ds, state, feed, check_ids=CHECKS)
 
     # the docs table no longer carries the tombstoned doc
-    docs2 = pipeline.load_docs(spark, ds)
+    docs2 = docs_store.read_docs(spark, ds)
     assert docs2.filter(F.col("doc_id") == f"node/{victim}").count() == 0
     assert docs2.count() == n_before - 1
 
@@ -101,8 +101,6 @@ def test_stream_drop_updates_errors(spark, tmp_path):
 
 def _store_file_bytes(ds: str):
     """{bucket: {relpath: bytes}} over manifest-referenced files."""
-    from keepright_spark import docs_store
-
     man = docs_store.read_manifest(ds)
     root = docs_store.store_root(ds)
     out: dict = {}
@@ -118,21 +116,20 @@ def test_upsert_is_bucket_scoped(spark, tmp_path):
     """An upsert rewrites ONLY buckets containing batch doc_ids —
     every untouched bucket's files stay byte-identical (same relative
     paths, same bytes), and tombstones flow through."""
-    from keepright_spark import docs_store
-
     tiny = ensure_dataset("t")
     ds = _clone_dataset(tiny, str(tmp_path / "ds"))
-    docs = pipeline.load_docs(spark, ds)
+    docs = docs_store.read_docs(spark, ds)
     total = docs.count()
     all_ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
 
     docs_store.migrate(spark, ds)
     before = _store_file_bytes(ds)
+    sig_before = docs_store.signature(ds)
     assert docs_store.read_docs(spark, ds).count() == total
 
     # batch: replace one doc with itself + tombstone another
     keep_id, kill_id = all_ids[0], all_ids[1]
-    batch = pipeline.load_docs(spark, ds).filter(
+    batch = docs_store.read_docs(spark, ds).filter(
         F.col("doc_id").isin([keep_id, kill_id])
     )
     schema = batch.schema["spans"].dataType
@@ -154,31 +151,29 @@ def test_upsert_is_bucket_scoped(spark, tmp_path):
         assert set(after[str(t)].keys()) != set(before[str(t)].keys())
 
     # table contents: kill_id gone, everything else intact
-    now = pipeline.load_docs(spark, ds)
+    now = docs_store.read_docs(spark, ds)
     assert now.count() == total - 1
     assert now.filter(F.col("doc_id") == kill_id).count() == 0
     assert now.filter(F.col("doc_id") == keep_id).count() == 1
 
-    # the docs signature moved (diff scoping sees the upsert)
-    assert docs_store.signature_entries(ds) is not None
+    # the docs signature moved (prepare sees the upsert)
+    assert docs_store.signature(ds) != sig_before
 
 
 def test_store_manifest_is_the_authority(spark, tmp_path):
     """A crash between manifest commit and plain-file removal leaves
     both docs.parquet and the store; readers and re-migration prefer
     the store and drop the stale plain file."""
-    from keepright_spark import docs_store
-
     tiny = ensure_dataset("t")
     ds = _clone_dataset(tiny, str(tmp_path / "ds"))
-    total = pipeline.load_docs(spark, ds).count()
+    total = docs_store.read_docs(spark, ds).count()
     docs_store.migrate(spark, ds)
 
     # simulate the crash leftover: a stale plain file reappears
     stale = os.path.join(ds, "docs.parquet")
     with open(stale, "wb") as f:
         f.write(b"not a parquet file")
-    assert pipeline.load_docs(spark, ds).count() == total  # store wins
+    assert docs_store.read_docs(spark, ds).count() == total  # store wins
     docs_store.migrate(spark, ds)  # idempotent; sweeps the leftover
     assert not os.path.exists(stale)
 
@@ -186,7 +181,7 @@ def test_store_manifest_is_the_authority(spark, tmp_path):
     orphan = os.path.join(docs_store.store_root(ds), "stage_v99")
     os.makedirs(orphan, exist_ok=True)
     docs_store.upsert(
-        spark, ds, pipeline.load_docs(spark, ds).limit(1)
+        spark, ds, docs_store.read_docs(spark, ds).limit(1)
     )
     assert not os.path.isdir(orphan)
 
@@ -196,17 +191,15 @@ def test_migrate_resumes_after_mid_move_crash(spark, tmp_path):
     bNN_v1 dirs at the store root and NO manifest; the retry must not
     trip over them (rename onto a non-empty dir) and must produce the
     full table."""
-    from keepright_spark import docs_store
-
     tiny = ensure_dataset("t")
     ds = _clone_dataset(tiny, str(tmp_path / "ds"))
-    total = pipeline.load_docs(spark, ds).count()
+    total = docs_store.read_docs(spark, ds).count()
 
     # simulate the half-done first attempt: stage written, SOME
     # buckets already moved into place, manifest never committed
     root = docs_store.store_root(ds)
     os.makedirs(root, exist_ok=True)
-    docs = pipeline.load_docs(spark, ds)
+    docs = docs_store.read_docs(spark, ds)
     stage = os.path.join(root, "stage_crashed")
     (
         docs.withColumn("bucket", docs_store.bucket_expr(64))
@@ -227,5 +220,5 @@ def test_migrate_resumes_after_mid_move_crash(spark, tmp_path):
     assert man is not None
     assert docs_store.read_docs(spark, ds).count() == total
     # the crashed stage dir is unreferenced → swept by the next upsert
-    docs_store.upsert(spark, ds, pipeline.load_docs(spark, ds).limit(1))
+    docs_store.upsert(spark, ds, docs_store.read_docs(spark, ds).limit(1))
     assert not os.path.isdir(stage)

@@ -4,12 +4,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 import pytest
 from conftest import spark_jobs
 
-from keepright_spark import lifecycle, pipeline, watchdog
+from keepright_spark import docs_store, lifecycle, pipeline, watchdog
 from keepright_spark.watchdog import WatchdogError
 
 
@@ -85,3 +86,41 @@ def test_watchdog_missing_and_floors(spark, tiny_dir, tmp_path):
         json.dump(m, f)
     issues = watchdog.run_watchdog(tiny_dir, state)
     assert any("not committed" in i for i in issues)
+
+
+@pytest.mark.parametrize("layout", ["file", "dir", "store"])
+def test_watchdog_input_rules(spark, tiny_dir, tmp_path, layout):
+    """The input rules (too small, older than 18 days, not found) read
+    the files of the current docs table in each layout; a docs-store
+    crash orphan does not make an old store look fresh."""
+    ds = tmp_path / "ds"
+    ds.mkdir()
+    src = os.path.join(tiny_dir, "docs.parquet")
+    if layout == "dir":
+        (ds / "docs.parquet").mkdir()
+        shutil.copy(src, ds / "docs.parquet" / "part-0.parquet")
+    else:
+        shutil.copy(src, ds)
+    if layout == "store":
+        docs_store.migrate(spark, str(ds))
+    ds = str(ds)
+    assert watchdog.run_watchdog(ds) == []
+
+    size = sum(n for _, n, _ in docs_store.docs_files(ds))
+    issues = watchdog.run_watchdog(ds, limits={"docs_minimum_bytes": size + 1})
+    assert issues == [f"input docs table is too small. Size is {size}"]
+
+    aged = time.time() - 19 * 86400
+    for root, _dirs, files in os.walk(ds):
+        for fn in files:
+            os.utime(os.path.join(root, fn), (aged, aged))
+    if layout == "store":
+        orphan = os.path.join(docs_store.store_root(ds), "stage_v9")
+        os.makedirs(orphan)
+        with open(os.path.join(orphan, "part-0.parquet"), "wb") as f:
+            f.write(b"x" * 2048)
+    assert watchdog.run_watchdog(ds) == ["input docs table is older than 18 days"]
+
+    gone = os.path.join(ds, "docs_store" if layout == "store" else "docs.parquet")
+    shutil.rmtree(gone) if os.path.isdir(gone) else os.remove(gone)
+    assert watchdog.run_watchdog(ds) == [f"input docs table not found under {ds}"]
